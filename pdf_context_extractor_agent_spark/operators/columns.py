@@ -19,14 +19,10 @@ when the reference's cache would have been invalidated
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from ..functions.text import fast_match
+from pyspark.sql import DataFrame
 
 from ..patterns import COLUMN_KEYWORDS, MONEY_FORMAT, NOTE_FORMAT_PATTERNS, NOTE_PURE_DIGIT, ROLE_ORDER
 
@@ -246,14 +242,22 @@ def _extract_batch_loop(b: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def extract_items_fallback(ranged_rows: DataFrame) -> DataFrame:
-    """Arrow-kernel extraction: ONE kernel handles both the standard
+def extract_items(ranged_rows: DataFrame) -> DataFrame:
+    """C5-C7 extraction: ONE Arrow kernel handles both the standard
     header-map path and the dynamic re-analysis fallback (the
-    reference's dispatch, base_statement_parser.py:134-149).
+    reference's dispatch, base_statement_parser.py:134-149, branched
+    per row inside the kernel).
 
     Input: (url, statement_type, row_idx, cells, item_col, cur_col,
     prev_col, note_col). Output drops rows with empty item names — the
     reference ``continue``s on them (balance_sheet.py:207-208).
+
+    An all-codegen plan of the same dispatch (layered column
+    expressions, bitmask probing) was built and measured slower on this
+    regex-dense per-cell workload (~5 s vs ~1.9 s per 529 k rows at 8
+    cores: Java regex over UTF8String→String conversions loses to
+    CPython's C regex engine over pandas batches), so this kernel is
+    the only path. It has no arity bound.
 
     The per-row loop is deliberate: a masked-matrix vectorization of
     the standard path (per-column pandas regex passes + padded object
@@ -268,298 +272,3 @@ def extract_items_fallback(ranged_rows: DataFrame) -> DataFrame:
             yield _extract_batch_loop(b)
 
     return ranged_rows.mapInPandas(kernel, schema=_ITEM_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# JVM fast path: the standard header-map extraction (C5-C7) as pure
-# column expressions — the hot path never leaves whole-stage codegen.
-# ---------------------------------------------------------------------------
-
-_NOTE_RE_UNION = "|".join(NOTE_FORMAT_PATTERNS + [NOTE_PURE_DIGIT])
-
-
-def _at(cells, pos0):
-    """0-based ANSI-safe cell access (null when out of range)."""
-    return F.when(pos0 >= 0, F.try_element_at(cells, pos0 + F.lit(1)))
-
-
-def _money_ok(c):
-    return c.isNotNull() & (F.trim(c) != "") & F.trim(c).rlike(MONEY_FORMAT)
-
-
-def _note_ok(c):
-    return c.isNotNull() & (F.trim(c) != "") & F.trim(c).rlike(_NOTE_RE_UNION)
-
-
-def _clean_c6(c):
-    """C6 numeric cleanup as expressions (column_analyzer.py:442-465)."""
-    cleaned = F.regexp_replace(F.regexp_replace(c, r"[^0-9.,\-]", ""), ",", "")
-    return F.when(cleaned.isin("", "-", "--"), F.lit(None).cast("string")).otherwise(cleaned)
-
-
-def _probe_numeric(cells, idx):
-    """C5 numeric probing: exact column, else left-only [-1, -2]."""
-    return F.coalesce(
-        *[F.when(_money_ok(_at(cells, idx + off)), _at(cells, idx + off)) for off in (0, -1, -2)]
-    )
-
-
-def _probe_note(cells, idx):
-    """C5 note probing: exact column, else [-1, +1, -2, +2]."""
-    return F.coalesce(
-        *[F.when(_note_ok(_at(cells, idx + off)), _at(cells, idx + off))
-          for off in (0, -1, 1, -2, 2)]
-    )
-
-
-def _name_at(cells, pos0):
-    """C7 candidate: cell at pos, CR/LF-stripped, null when empty."""
-    cleaned = F.trim(F.regexp_replace(F.coalesce(_at(cells, pos0), F.lit("")), r"[\n\r]", ""))
-    return F.when(cleaned != "", cleaned)
-
-
-def extract_items_jvm(ranged_rows: DataFrame) -> DataFrame:
-    """Standard-path extraction fully in column expressions."""
-    cells = F.col("cells")
-    ic = F.coalesce(F.col("item_col"), F.lit(0))
-    cc, pc, nc = F.col("cur_col"), F.col("prev_col"), F.col("note_col")
-    name = F.coalesce(_name_at(cells, ic), _name_at(cells, F.lit(0)), _name_at(cells, F.lit(1)))
-    cur = F.when(cc.isNotNull(), _clean_c6(_probe_numeric(cells, cc)))
-    prev = F.when(pc.isNotNull(), _clean_c6(_probe_numeric(cells, pc)))
-    note = F.when(nc.isNotNull(), F.trim(_probe_note(cells, nc)))
-    return ranged_rows.select(
-        "url", "statement_type", "row_idx",
-        name.alias("item_name"),
-        cur.alias("current_period"),
-        prev.alias("previous_period"),
-        note.alias("note"),
-    ).filter(F.col("item_name").isNotNull())
-
-
-# Analysis window for the codegen'd items path: column-role analysis
-# and offset probing scan at most this many leading columns (bitmask
-# positions). Statement tables are ≤ ~8 columns in practice (corpus
-# max observed: 4); 16 is tail headroom. The bound is a CODEGEN
-# budget, not just politeness: the fused items stage must stay under
-# Janino's 64KB method limit or the whole stage silently drops to
-# interpreted eval (~10× slower). Rows wider than the window analyze
-# only their first 16 columns (the Arrow kernel via mode="arrow" has
-# no such bound).
-_DYN_K = 16
-
-
-def _standard_dispatch() -> Column:
-    """base_statement_parser.py:134-149: header-map path iff the row's
-    arity fits the mapped columns (±1) and a current column exists."""
-    n = F.size(F.col("cells"))
-    expected = F.greatest(
-        F.coalesce(F.col("cur_col"), F.lit(0)), F.coalesce(F.col("prev_col"), F.lit(0))
-    ) + 1
-    return F.col("cur_col").isNotNull() & (n >= expected) & (F.abs(n - expected) <= 1)
-
-
-def _first_bit(mask: Column) -> Column:
-    """Index of the lowest set bit (null when mask is 0/null)."""
-    return F.when(mask != 0, F.bit_count((mask.bitwiseAND(-mask)) - 1))
-
-
-def _union_regex(patterns: list[str]) -> str:
-    """search-any-of union: each pattern keeps its own semantics inside
-    a non-capturing alternation (re.search(p_i) for any i ≡ one rlike)."""
-    return "|".join(f"(?:{p})" for p in patterns)
-
-
-@lru_cache(maxsize=4)
-def _dyn_layers(K: int) -> tuple[dict, ...]:
-    """``analyze_columns`` (C1-C3, column_analyzer.py:108-272) AND the
-    C5 probe machinery as pure codegen'able expressions over the first
-    ``K`` columns of ``cells``.
-
-    Generated-CODE-SIZE is the design constraint, not expression count.
-    Two compounding effects otherwise kill this stage: (a) Spark's
-    subexpression elimination skips anything under a conditional
-    branch, so nested coalesce/when trees duplicate their operands
-    MULTIPLICATIVELY (the naive probe pair alone generated 384
-    element_at calls / 237 KB of Java); (b) whole-stage codegen cannot
-    split pipelined expressions into methods, so the fused
-    ``processNext()`` blows Janino's 64 KB hard limit and the stage
-    silently drops to interpreted eval, ~10× slower. Hence everything
-    here is LAYERED (each subexpression materialized once as a column,
-    later layers reference it by name) and mask-based:
-
-    * layer 0 — per-position trimmed text ``__t{i}`` (null when
-      absent / whitespace-only);
-    * layer 1 — position bitmasks: money-format ``__pm`` / note-format
-      ``__pn`` (ungated — the C5 probes below need them on every row)
-      and per-role C1 keyword masks ``__kwm_*`` (gated on ``__dyn``:
-      standard rows skip the 4-regex-per-position scan);
-    * layer 2 — first keyword-matched column per role (lowest set bit
-      via ``x & -x``, its index via ``bit_count(x-1)``);
-    * layer 3 — C2 candidate masks: C1-taken positions knocked out,
-      note checked before money exactly like the reference's
-      continue-chain;
-    * layer 4 — the reference's merge rules: inferred note OVERWRITES
-      a keyword note ({**matches, **inferred} dict-merge quirk), money
-      candidates fill current-then-previous, C3 swaps a reversed
-      current/previous pair;
-    * layer 5 — effective column indices (header map when the arity
-      fits, re-inferred otherwise);
-    * layer 6 — C5 probe winners: offset probing becomes three bit
-      tests against ``__pm``/``__pn`` instead of re-evaluating
-      trim+regex per (role × offset); the final select fetches each
-      winning cell ONCE.
-
-    All refs are by-name; memoized per process like the other
-    expression banks.
-    """
-    size = F.size(F.col("cells"))
-    dyn = F.col("__dyn")
-
-    layer0: dict[str, Column] = {}
-    for i in range(K):
-        t = F.when(
-            F.lit(i) < size,
-            F.trim(F.coalesce(F.try_element_at(F.col("cells"), F.lit(i + 1)), F.lit(""))),
-        )
-        layer0[f"__t{i}"] = F.when(t != "", t)
-
-    def txt(i: int) -> Column:
-        return F.col(f"__t{i}")
-
-    def posmask(flag) -> Column:
-        m = F.lit(0).cast("long")
-        for i in range(K):
-            m = m + F.when(flag(i), F.lit(1 << i).cast("long")).otherwise(0)
-        return m
-
-    layer1: dict[str, Column] = {
-        "__pm": posmask(lambda i: txt(i).rlike(MONEY_FORMAT)),
-        "__pn": posmask(lambda i: txt(i).rlike(_NOTE_RE_UNION)),
-    }
-    for role in ROLE_ORDER:
-        union = _union_regex(COLUMN_KEYWORDS[role])
-        layer1[f"__kwm_{role}"] = F.when(dyn, posmask(lambda i: txt(i).rlike(union)))
-
-    layer2 = {f"__kw_{role}": _first_bit(F.col(f"__kwm_{role}")) for role in ROLE_ORDER}
-
-    def iseq(role: str, i: int) -> Column:
-        return F.coalesce(F.col(f"__kw_{role}") == i, F.lit(False))
-
-    taken = posmask(
-        lambda i: iseq("item_name", i) | iseq("current_period", i)
-        | iseq("previous_period", i) | iseq("note", i)
-    )
-    layer3 = {"__taken": taken}
-
-    pm, pn, tk = F.col("__pm"), F.col("__pn"), F.col("__taken")
-    ntk = F.bitwise_not(tk)
-    layer4 = {
-        "__ncand": pn.bitwiseAND(ntk),
-        "__mcand": pm.bitwiseAND(F.bitwise_not(pn)).bitwiseAND(ntk),
-    }
-
-    nm, mm = F.col("__ncand"), F.col("__mcand")
-    mm2 = mm.bitwiseAND(mm - 1)  # money candidates minus the first
-    m1, m2 = _first_bit(mm), _first_bit(mm2)
-    kw_cur, kw_prev = F.col("__kw_current_period"), F.col("__kw_previous_period")
-    dyn_cur = F.coalesce(kw_cur, m1)
-    dyn_prev = F.coalesce(kw_prev, F.when(kw_cur.isNotNull(), m1).otherwise(m2))
-    swap = dyn_cur.isNotNull() & dyn_prev.isNotNull() & (dyn_cur > dyn_prev)
-    layer5 = {
-        "__ecur": F.when(dyn, F.when(swap, dyn_prev).otherwise(dyn_cur)).otherwise(
-            F.col("cur_col")
-        ),
-        "__eprev": F.when(dyn, F.when(swap, dyn_cur).otherwise(dyn_prev)).otherwise(
-            F.col("prev_col")
-        ),
-        "__enote": F.when(dyn, F.coalesce(_first_bit(nm), F.col("__kw_note"))).otherwise(
-            F.col("note_col")
-        ),
-    }
-
-    def win(mask_col: str, idx_col: str, offsets: tuple[int, ...]) -> Column:
-        terms = ", ".join(
-            f"CASE WHEN {idx_col}+({o}) BETWEEN 0 AND 63 "
-            f"AND ((shiftright({mask_col}, CAST({idx_col}+({o}) AS INT)) & CAST(1 AS BIGINT)) = 1) "
-            f"THEN {idx_col}+({o}) END"
-            for o in offsets
-        )
-        return F.expr(f"coalesce({terms})")
-
-    # C5 probe order: numerics exact then left-only [-1,-2] (the
-    # merged-cell bug class); notes exact then [-1,+1,-2,+2]
-    layer6 = {
-        "__wcur": win("__pm", "__ecur", (0, -1, -2)),
-        "__wprev": win("__pm", "__eprev", (0, -1, -2)),
-        "__wnote": win("__pn", "__enote", (0, -1, 1, -2, 2)),
-    }
-    return layer0, layer1, layer2, layer3, layer4, layer5, layer6
-
-
-def extract_items_jvm_single(ranged_rows: DataFrame, K: int = _DYN_K) -> DataFrame:
-    """C5-C7 extraction — BOTH dispatch branches in one codegen'd plan.
-
-    The standard header-map path and the dynamic per-row re-analysis
-    resolve to per-row *effective column indices* (header's when the
-    arity fits, re-inferred otherwise); shared mask-based probing then
-    picks each winning cell and the final select fetches it once. No
-    Python in the row-level path at all — the split-plan alternative
-    (standard→JVM, dynamic→Arrow kernel) pays a union barrier plus a
-    second pass over the upstream join lineage, and the all-Arrow
-    variant pays serialization of the full row volume (~90 s Python +
-    ~100 s JVM per 60 k docs measured at 8 cores — the #2 stage of the
-    whole pipeline before this path landed).
-    """
-    layers = _dyn_layers(K)
-    df = ranged_rows.withColumn("__dyn", ~_standard_dispatch())
-    for layer in layers:
-        df = df.withColumns(layer)
-
-    cells = F.col("cells")
-    ic = F.coalesce(F.col("item_col"), F.lit(0))
-    name = F.coalesce(_name_at(cells, ic), _name_at(cells, F.lit(0)), _name_at(cells, F.lit(1)))
-    cur_v = F.try_element_at(cells, F.col("__wcur") + 1)
-    prev_v = F.try_element_at(cells, F.col("__wprev") + 1)
-    note_v = F.try_element_at(cells, F.col("__wnote") + 1)
-    return df.select(
-        "url", "statement_type", "row_idx",
-        name.alias("item_name"),
-        _clean_c6(cur_v).alias("current_period"),
-        _clean_c6(prev_v).alias("previous_period"),
-        F.trim(note_v).alias("note"),
-    ).filter(F.col("item_name").isNotNull())
-
-
-def extract_items(ranged_rows: DataFrame, mode: str = "arrow") -> DataFrame:
-    """C5-C7 extraction.
-
-    ``mode="arrow"`` (default): ONE Arrow kernel handles both the
-    standard header-map path and the dynamic re-analysis fallback (the
-    reference's dispatch, base_statement_parser.py:134-149, branched
-    per row inside the kernel). MEASURED fastest at bench scale
-    (~1.9 s / 529 k rows at 8 cores): CPython's C regex engine over
-    pandas batches beats JVM codegen on this regex-dense per-cell
-    workload, and there is no arity bound.
-
-    ``mode="jvm"``: the single-branch all-codegen plan
-    (`extract_items_jvm_single`) — standard and dynamic rows resolved
-    in one layered projection chain, zero per-row Python (~5 s on the
-    same input: Java regex over UTF8String→String conversions loses to
-    re2-style vectorized python here, kept because a cluster that is
-    Python-worker-constrained — or a corpus whose rows are much wider
-    than its cell texts — flips the trade). Analysis and probing scan
-    the first ``_DYN_K`` columns.
-
-    ``mode="split"``: standard→JVM expressions, dynamic→Arrow kernel —
-    kept for measurement; loses at bench scale (union barrier + double
-    join lineage: interleaved A/B at 36k docs: ~31s vs ~51s per
-    16-core run).
-    """
-    if mode == "arrow":
-        return extract_items_fallback(ranged_rows)
-    if mode == "split":
-        standard = _standard_dispatch()
-        jvm = extract_items_jvm(ranged_rows.filter(standard))
-        dyn = extract_items_fallback(ranged_rows.filter(~standard))
-        return jvm.unionByName(dyn)
-    return extract_items_jvm_single(ranged_rows)

@@ -38,9 +38,7 @@ def _pid_array_expr() -> Column:
     return arr
 
 
-def match_items(
-    items: DataFrame, spark: SparkSession, dictionary: bool = True
-) -> dict[str, DataFrame]:
+def match_items(items: DataFrame, spark: SparkSession) -> dict[str, DataFrame]:
     """items (url, statement_type, row_idx, item_name, values…) →
 
     * ``parsed``  — the ordered_items relation: every first-wins category
@@ -54,20 +52,17 @@ def match_items(
     * ``unmatched`` — anti-join remainder with row indices
       (balance_sheet.py:268-272).
 
-    ``dictionary=True`` (default) evaluates the J1 bank per DISTINCT
-    (statement_type, item_name) instead of per row: account names come
-    from a standardized chart of accounts, so their vocabulary is
-    bounded and grows sublinearly with the corpus (73 distinct names
-    per 3.17M item rows at bench scale; a few 10^4 at any scale). The
+    The J1 bank is evaluated per DISTINCT (statement_type, item_name),
+    not per row: account names come from a standardized chart of
+    accounts, so their vocabulary is bounded and grows sublinearly with
+    the corpus (73 distinct names per 3.17M item rows at bench scale; a
+    few 10^4 at any scale). The
     distinct is map-side partial-aggregated (the exchange carries only
     each task's local name set), the bank runs over the tiny dictionary,
     and the pid joins back on name equality — AQE sees the dictionary's
     runtime size and picks a broadcast hash join, so the big side never
-    shuffles. Measured 15.9s → ~2s on the 60k-doc 8-core leg.
-
-    ``dictionary=False`` keeps the inline per-row when-chain (zero
-    shuffle, no distinct stage) — the right shape only if the name
-    column were high-cardinality, kept for the differential test.
+    shuffles. Measured 15.9s → ~2s on the 60k-doc 8-core leg against
+    the per-row when-chain it replaced.
     """
     # only the slot identity survives into the outputs — pattern text
     # and the ordering ints already did their job when pids were
@@ -84,15 +79,12 @@ def match_items(
     # when-chain of per-statement arrays — 3× fewer regex evaluations
     # than one global bank). One narrow projection + one broadcast
     # equi-join on pid — no explode, no window, no anti-join.
-    if dictionary:
-        name_pid = (
-            items.select("statement_type", "item_name")
-            .distinct()
-            .withColumn("pid", F.array_min(_pid_array_expr()))
-        )
-        with_pid = items.join(name_pid, ["statement_type", "item_name"], "left")
-    else:
-        with_pid = items.withColumn("pid", F.array_min(_pid_array_expr()))
+    name_pid = (
+        items.select("statement_type", "item_name")
+        .distinct()
+        .withColumn("pid", F.array_min(_pid_array_expr()))
+    )
+    with_pid = items.join(name_pid, ["statement_type", "item_name"], "left")
     winners = with_pid.filter(F.col("pid").isNotNull()).join(pat, "pid")
     unmatched_rows = with_pid.filter(F.col("pid").isNull()).select(
         "url", "statement_type", "row_idx", "item_name",

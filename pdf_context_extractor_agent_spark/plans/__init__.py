@@ -3,7 +3,6 @@
 from .crawl import crawl_plan  # noqa: F401
 from .curate import curate, quality_gate  # noqa: F401
 from .extract import (  # noqa: F401
-    extraction_result,
     parse_balance_via_boundary,
     parse_statements,
     statement_rows,

@@ -16,9 +16,9 @@ callers write or further compose. Plan shape: one shuffle to establish
 per-url row order, broadcast joins for every dimension table (pattern
 banks and the per-doc structure rows — see SCALE.md for when the
 latter flips to a co-partitioned join), window functions for all
-ordering logic. Row extraction runs as codegen'd column expressions for
-the standard header-map path; only arity-mismatch/headerless rows take
-the Arrow kernel (plus a one-row-per-document header-analysis hop).
+ordering logic. Row extraction runs in one Arrow-batched kernel that
+branches per row between the header-map path and the dynamic
+re-analysis fallback, after a one-row-per-document header-analysis hop.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernels import extract_pages
 from ..operators.boundary import balance_boundaries, prune_rows_to_boundary
 from ..operators.columns import extract_items, header_maps
 from ..operators.match import match_items
@@ -133,28 +132,3 @@ def parse_balance_via_boundary(page_df: DataFrame, spark: SparkSession) -> dict[
     rows = merged_clean_rows(pruned)
     return _parse_from_rows(rows, spark, ("balance_sheet",))
 
-
-def extraction_result(
-    pages_tbl: DataFrame, spark: SparkSession, repartition: bool = True
-) -> dict[str, DataFrame]:
-    """Full pipeline from the raw pages table: kernel → statements.
-
-    ``repartition=True`` routes the input through the skew lanes
-    (salted dense partitions + one-doc partitions for oversized
-    documents — sources/pages.py) before the layout kernel, so a single
-    500-page annual report (the reference's
-    tools/export_all_statements.py:19-55 case) can only delay itself,
-    never a partition of small pages.
-
-    ``page_df`` is persisted because three independent consumers read it
-    (statements, notes, text reassembly); at 10^12-row scale this would
-    be a checkpointed Iceberg stage table instead of executor memory.
-    """
-    from ..sources import skew_partitioned
-
-    if repartition:
-        pages_tbl = skew_partitioned(pages_tbl)
-    page_df = extract_pages(pages_tbl).persist()
-    out = parse_statements(page_df, spark)
-    out["pages"] = page_df
-    return out

@@ -1,12 +1,19 @@
-"""Operator-level tests for C1-C7 (pure Python kernels, no Spark).
+"""Operator-level tests for C1-C7.
 
 Ports the reference's test matrix (tests/test_column_analyzer.py and
-tests/test_integration.py — FIXTURES.md §4) case for case.
+tests/test_integration.py — FIXTURES.md §4) case for case on the pure
+Python kernels; the last test pins the Spark ``extract_items`` kernel
+to those same functions across the Arrow boundary.
 """
+
+import random
+
+from pyspark.sql import types as T
 
 from pdf_context_extractor_agent_spark.operators.columns import (
     analyze_columns,
     clean_numeric,
+    extract_items,
     extract_row,
     extract_values,
     is_money_format,
@@ -120,3 +127,50 @@ def test_note_type_check():
     vals = extract_values(["货币资金", "1.00", "2.00", "不是附注啊这个"], cmap)
     assert vals["note"] is None
 
+
+def test_extract_items_matches_python_rows_fuzz(spark):
+    """Fuzzed ranged rows (arity drift, null header columns, note/money
+    mixes, ``None``, whitespace and placeholder cells): the Arrow kernel
+    must equal ``extract_row`` mapped over the same rows in plain
+    Python, with a null ``item_col`` read as column 0 and empty-name
+    rows dropped. The pure functions are pinned to the reference case
+    for case above, so this pins the Arrow boundary's null handling
+    (nullable int columns arrive as float NaN, null cells as ``None``)."""
+    rng = random.Random(20260817)
+    vocab = [
+        "项目", "科目", "本期末", "上期末", "期末余额", "年初余额", "附注", "备注",
+        "货币资金", "应收账款", "流动资产合计", "资产总计", "减：库存股",
+        "1000000.00", "1,234,567.89", "-500.00", "0.00", "123456", "-", "--",
+        "", "  ", "n/a", "七、1", "三(2)", "6", "123", "1.23", "约1.5万", None,
+    ]
+    schema = T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("statement_type", T.StringType()),
+        T.StructField("row_idx", T.IntegerType()),
+        T.StructField("cells", T.ArrayType(T.StringType())),
+        T.StructField("item_col", T.IntegerType()),
+        T.StructField("cur_col", T.IntegerType()),
+        T.StructField("prev_col", T.IntegerType()),
+        T.StructField("note_col", T.IntegerType()),
+    ])
+
+    def hdr():
+        return rng.choice([None, None, 0, 1, 2, 3, 4, 5])
+
+    data = [
+        (
+            f"u{i % 40}", "balance_sheet", i,
+            [rng.choice(vocab) for _ in range(rng.randint(1, 10))],
+            hdr(), hdr(), hdr(), hdr(),
+        )
+        for i in range(600)
+    ]
+
+    expected = set()
+    for url, stmt, ridx, cells, ic, cc, pc, nc in data:
+        name, cur, prev, note = extract_row(cells, 0 if ic is None else ic, cc, pc, nc)
+        if name:
+            expected.add((url, stmt, ridx, name, cur, prev, note))
+
+    got = {tuple(r) for r in extract_items(spark.createDataFrame(data, schema)).collect()}
+    assert expected and got == expected

@@ -229,8 +229,8 @@ def test_zero_page_parse_yields_placeholder():
 
 
 def test_skew_lane_plan_output_identical(spark):
-    """skew_partitioned (the lane extraction_result routes through) must
-    not change WHAT is computed — only where it runs. Parsed output with
+    """skew_partitioned (the lane the pipeline CLI and lineage route
+    pages through) must not change WHAT is computed — only where it runs. Parsed output with
     the lane forced on (low threshold) equals the unrouted plan's."""
     from pdf_context_extractor_agent_spark.plans import parse_statements
     from pdf_context_extractor_agent_spark.kernels import extract_pages

@@ -54,11 +54,12 @@ def test_pattern_bank_is_not_nested_loop(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_match_dictionary_equals_inline(spark):
-    """The dictionary-encoded J1 path (bank over DISTINCT names, pid
-    joined back) must agree with the inline per-row when-chain on every
-    output relation — including name-probing edge shapes (overlapping
-    优先股 slots, totals, unmatched, empty-bank statements)."""
+def test_match_items_expected_relations(spark):
+    """J1-J3 on name-probing edge shapes, every output relation pinned
+    row for row: a duplicate category slot keeps its first row, the
+    其中：优先股 overlap (non-current liabilities AND equity) resolves to
+    the first bank in order, 资产总计 is a totals slot, an unknown name
+    and an empty name match nothing and land in ``unmatched`` only."""
     from pdf_context_extractor_agent_spark.operators.match import match_items
 
     rows = [
@@ -76,12 +77,43 @@ def test_match_dictionary_equals_inline(spark):
         "url string, statement_type string, row_idx int, item_name string, "
         "current_period string, previous_period string, note string",
     )
-    a = match_items(items, spark, dictionary=False)
-    b = match_items(items, spark, dictionary=True)
-    for k in ("parsed", "slots", "matched", "unmatched"):
-        ra = sorted(map(tuple, a[k].collect()))
-        rb = sorted(map(tuple, b[k].select(*a[k].columns).collect()))
-        assert ra == rb, f"{k} diverged between dictionary and inline J1"
+    m = match_items(items, spark)
+
+    def got(k, *cols):
+        return sorted(map(tuple, m[k].select(*cols).collect()), key=repr)
+
+    slot = ("url", "statement_type", "section_path", "standard_name",
+            "original_name", "current_period", "previous_period", "note")
+    first_wins = [
+        ("u1", "balance_sheet", "assets.assets_total", "assets_total",
+         "资产总计", "9.0", "8.0", None),
+        ("u1", "balance_sheet", "assets.current_assets", "货币资金",
+         "货币资金", "1.0", "0.9", None),
+        ("u1", "balance_sheet", "liabilities.non_current_liabilities", "其中：优先股",
+         "其中：优先股", "3.0", None, None),
+        ("u2", "cash_flow", "operating_activities", "sales_goods_cash",
+         "销售商品、提供劳务收到的现金", "6.0", None, None),
+        ("u2", "income_statement", "revenue", "operating_revenue",
+         "其中：营业收入", "5.0", "4.0", "1"),
+    ]
+    is_total = [True, False, False, False, False]
+    row_order = [4, 1, 3, 1, 1]
+
+    assert got("parsed", *slot, "row_order", "is_total") == [
+        (*r, o, t) for r, o, t in zip(first_wins, row_order, is_total)
+    ]
+    assert got("slots", *slot, "is_total") == [
+        (*r, t) for r, t in zip(first_wins, is_total)
+    ]
+    assert got("matched", "url", "statement_type", "row_idx") == [
+        ("u1", "balance_sheet", 1), ("u1", "balance_sheet", 2),
+        ("u1", "balance_sheet", 3), ("u1", "balance_sheet", 4),
+        ("u2", "cash_flow", 1), ("u2", "income_statement", 1),
+    ]
+    assert got("unmatched", *items.columns) == [
+        ("u1", "balance_sheet", 5, "no such item", "0", None, None),
+        ("u3", "balance_sheet", 1, "", None, None, None),
+    ]
 
 
 def test_pattern_dim_is_total_constant_per_slot(spark):
