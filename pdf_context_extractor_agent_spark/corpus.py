@@ -730,9 +730,11 @@ def render_minipdf_doc(pages: list[Page], cid: bool = False,
 def _break_xref(blob: bytes) -> bytes:
     """Corrupt a classic PDF's cross-reference table in place: every
     offset zeroed and ``startxref`` pointed at 0 — the 'malformed xref'
-    damage real-world PDFs commonly carry. File length is preserved so
-    any offset-dependent content bytes are untouched. Non-classic
-    layouts (xref streams) are returned unchanged."""
+    damage real-world PDFs commonly carry. Every byte before the xref
+    table is untouched, so object offsets stay where they were; the
+    tail may get shorter, since the ``startxref`` offset becomes the
+    single digit ``0``. Non-classic layouts (xref streams) are returned
+    unchanged."""
     p = blob.rfind(b"\nxref\n")
     if p < 0 or b"trailer" not in blob[p:]:
         return blob

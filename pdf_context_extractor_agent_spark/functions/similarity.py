@@ -87,14 +87,28 @@ def lsh_index(
     """Attach the bucket signature. At scale you'd `repartitionByRange`/
     bucket-write on `bucket` so a query prunes to one file group.
 
-    ``dim`` defaults to the data's own vector length (one tiny first()
-    action, the same probe the SQ/PQ codecs use): a mismatched literal
-    dim makes ``zip_with`` null-pad every dot product, silently filing
-    EVERY vector under bucket 0 — and ann_topk, whose planes derive
-    from the query's true length, then probes empty buckets and
-    returns an empty top-k with no error."""
+    ``dim`` defaults to the data's own vector length: a mismatched
+    literal dim makes ``zip_with`` null-pad every dot product, silently
+    filing EVERY vector under bucket 0 — and ann_topk, whose planes
+    derive from the query's true length, then probes empty buckets and
+    returns an empty top-k with no error. The probe is one min/max
+    aggregation over the vector lengths:
+
+    * vectors of different lengths raise ``ValueError`` (no single dim
+      is right for all of them);
+    * a frame with no non-null vector (empty, or all null) has no length
+      to probe and gets the constant bucket 0 — the bucket a null vector
+      gets from the signature anyway."""
     if dim is None:
-        dim = int(emb.select(F.size(vec_col)).first()[0])
+        lo, hi = emb.agg(F.min(F.size(vec_col)), F.max(F.size(vec_col))).first()
+        if lo is None:
+            return emb.withColumn("bucket", F.lit(0).cast("long"))
+        if lo != hi:
+            raise ValueError(
+                f"lsh_index: {vec_col!r} vectors have lengths {lo}..{hi}; "
+                "pad them to one length or pass dim="
+            )
+        dim = int(lo)
     planes = _hyperplanes(dim, n_planes, seed)
     return emb.withColumn("bucket", hyperplane_signature(F.col(vec_col), planes))
 

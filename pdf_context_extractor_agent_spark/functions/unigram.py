@@ -34,7 +34,7 @@ Plan shapes:
   (``k ≤ max_len``), one max-struct groupBy per round. The DP relation
   is the DISTINCT-WORD dimension — segmentation never touches the
   corpus; callers join the result back by word. Deep lineage is capped
-  with a localCheckpoint every few rounds (page_rank's pattern).
+  with a localCheckpoint every 4 rounds.
 """
 
 from __future__ import annotations

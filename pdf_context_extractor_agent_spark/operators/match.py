@@ -48,9 +48,12 @@ def match_items(items: DataFrame, spark: SparkSession) -> dict[str, DataFrame]:
       by validation: first occurrence for category items (J2,
       balance_sheet.py:299-301), last for totals (dict-slot overwrite,
       :339 etc.).
-    * ``matched`` — all rows that matched anything (parsing_info counts).
+    * ``matched`` — all rows that matched anything.
     * ``unmatched`` — anti-join remainder with row indices
       (balance_sheet.py:268-272).
+    * ``counts`` — per (url, statement_type) ``matched_items`` /
+      ``unmatched_items``, the parsing_info counts (balance_sheet.py:
+      152-156), from one aggregation over the pid-joined relation.
 
     The J1 bank is evaluated per DISTINCT (statement_type, item_name),
     not per row: account names come from a standardized chart of
@@ -84,16 +87,20 @@ def match_items(items: DataFrame, spark: SparkSession) -> dict[str, DataFrame]:
         .distinct()
         .withColumn("pid", F.array_min(_pid_array_expr()))
     )
-    with_pid = items.join(name_pid, ["statement_type", "item_name"], "left")
+    # every output reads the pid-joined relation (winners, unmatched,
+    # counts); persist it so the dictionary join and the items it reads
+    # are evaluated once per run. The pattern-dim join on the winner
+    # side is a broadcast lookup, cheap to repeat per consumer.
+    with_pid = items.join(name_pid, ["statement_type", "item_name"], "left").persist()
     winners = with_pid.filter(F.col("pid").isNotNull()).join(pat, "pid")
     unmatched_rows = with_pid.filter(F.col("pid").isNull()).select(
         "url", "statement_type", "row_idx", "item_name",
         "current_period", "previous_period", "note",
     )
-
-    # four consumers (parsed/slots/matched/unmatched) read the winner
-    # set; persist so the bank + broadcast joins run once
-    winners = winners.persist()
+    counts = with_pid.groupBy("url", "statement_type").agg(
+        F.count("pid").alias("matched_items"),
+        F.count_if(F.col("pid").isNull()).alias("unmatched_items"),
+    )
 
     # J2 first-occurrence / J3 totals-overwrite as min_by/max_by HASH
     # aggregates instead of row_number windows: is_total is constant
@@ -152,4 +159,10 @@ def match_items(items: DataFrame, spark: SparkSession) -> dict[str, DataFrame]:
 
     matched = winners.select("url", "statement_type", "row_idx")
 
-    return {"parsed": parsed, "slots": slots, "matched": matched, "unmatched": unmatched_rows}
+    return {
+        "parsed": parsed,
+        "slots": slots,
+        "matched": matched,
+        "unmatched": unmatched_rows,
+        "counts": counts,
+    }

@@ -16,6 +16,8 @@ Spark's ``rlike``).
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 
 # ---------------------------------------------------------------------------
@@ -374,8 +376,13 @@ def _item_rows() -> list[tuple]:
     return rows
 
 
+@lru_cache(maxsize=4)
 def item_pattern_df(spark: SparkSession) -> DataFrame:
-    """The unified J1+J3 pattern bank as a broadcastable DataFrame."""
+    """The unified J1+J3 pattern bank as a broadcastable DataFrame.
+
+    Session-keyed, like ``validate._essential_dim``: createDataFrame is
+    a driver round-trip per plan build otherwise, and the bank never
+    changes within a process."""
     return spark.createDataFrame(
         _item_rows(),
         "pid int, statement_type string, section_path string, standard_name string, "

@@ -19,6 +19,23 @@ latter flips to a co-partitioned join), window functions for all
 ordering logic. Row extraction runs in one Arrow-batched kernel that
 branches per row between the header-map path and the dynamic
 re-analysis fallback, after a one-row-per-document header-analysis hop.
+
+Five relations are persisted, each because more than one consumer of
+one run reads it and recomputing it would re-run work upstream of it:
+
+* ``rows`` — the merged clean rows; read by SI, the header-row join
+  and the statement-range join (the page kernel + merge lineage);
+* ``structure`` — the SI rows; read by the header-row join, the range
+  join and ``parsing_info``'s ``total_rows``;
+* ``items`` — the items kernel's output; read twice by
+  :func:`match_items` (distinct-name dictionary and pid-join probe), so
+  the ``extract_items`` and ``header_maps`` Python kernels run once;
+* the pid-joined relation inside :func:`match_items` — read by the
+  winners, ``unmatched`` and the match counts behind ``parsing_info``;
+* ``slots`` — read by checks, completeness and the summary.
+
+With these, each Python kernel evaluates each of its input rows once
+however many of the returned relations a caller writes.
 """
 
 from __future__ import annotations
@@ -44,10 +61,12 @@ def statement_rows(page_df: DataFrame) -> DataFrame:
 def _parse_from_rows(
     rows: DataFrame, spark: SparkSession, statement_types: tuple[str, ...]
 ) -> dict[str, DataFrame]:
-    # rows and structure each feed 3-4 downstream branches; without a
-    # persist every branch would recompute the kernel + merge lineage.
-    # At 10^12-row scale these become checkpointed Iceberg stage tables;
-    # in-memory/disk persist is the single-job analog.
+    # Persisted: rows, structure, items, slots, and the pid-joined
+    # relation inside match_items (the module docstring names who reads
+    # each). Unpersisted, every further reader would re-run the page
+    # kernel + merge lineage or a Python kernel. At 10^12-row scale
+    # these become checkpointed Iceberg stage tables; in-memory/disk
+    # persist is the single-job analog.
     rows = rows.persist()
     structure = identify_structures(rows, spark, statement_types).persist()
 
@@ -80,21 +99,23 @@ def _parse_from_rows(
         .select("url", "statement_type", "row_idx", "cells",
                 "item_col", "cur_col", "prev_col", "note_col")
     )
-    items = extract_items(ranged)
+    # items feeds match_items' distinct-name dictionary AND the probe
+    # side of its pid join: unpersisted, one run of the plan would
+    # evaluate the items kernel (and header_maps under it) once per read
+    items = extract_items(ranged).persist()
     m = match_items(items, spark)
     # slots feed checks + completeness + summary
     m["slots"] = m["slots"].persist()
 
-    total_rows = rows.groupBy("url").agg((F.max("row_idx") + 1).alias("total_rows"))
-    parsing_info = (
-        m["matched"].groupBy("url", "statement_type").agg(F.count("*").alias("matched_items"))
-        .join(
-            m["unmatched"].groupBy("url", "statement_type").agg(F.count("*").alias("unmatched_items")),
-            ["url", "statement_type"],
-            "outer",
-        )
-        .join(total_rows, "url", "left")
-        .fillna(0, subset=["matched_items", "unmatched_items"])
+    # J4: match counts from match_items' one aggregation over its
+    # persisted pid-joined relation; total_rows is the merged table's
+    # row count, which SI already carries per (url, statement) as max_row
+    parsing_info = m["counts"].join(
+        structure.select(
+            "url", "statement_type", (F.col("max_row") + 1).alias("total_rows")
+        ),
+        ["url", "statement_type"],
+        "left",
     )
 
     checks = validation_checks(m["slots"])

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pdf_context_extractor_agent_spark.corpus import pages_df
@@ -7,6 +9,11 @@ from pdf_context_extractor_agent_spark.kernels import extract_pages
 from pdf_context_extractor_agent_spark.session import get_spark
 
 N_TEST_DOCS = 20
+
+# The suite's JVM needs a few GB, not session.py's 48g production
+# default: a heap that may grow to 48g gets the JVM OOM-killed on a
+# 16 GB host partway through the suite. An explicit setting still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

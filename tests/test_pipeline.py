@@ -86,6 +86,35 @@ def test_fixture_a_validation(fixture_a_result):
     assert abs(comp.completeness_score - 0.75) < 1e-9
 
 
+def test_parsing_info_counts_edges(spark):
+    """parsing_info is one aggregation over the pid-joined items: a
+    statement whose items all match reports 0 unmatched (not null), one
+    whose items all miss reports 0 matched, and total_rows is the merged
+    table's row count."""
+    # income anchors 营业利润/利润总额/净利润 are also item names, so
+    # every row of this (SI-invalid, fully parsed) table matches
+    all_hit = [["营业利润", "10.00", "9.00"], ["利润总额", "10.00", "9.00"],
+               ["净利润", "8.00", "7.00"]]
+    # the 流动资产 anchor row and an unknown name: nothing matches
+    all_miss = [["流动资产：", "", ""], ["无此项目", "1.00", "2.00"]]
+    raw = rows_from_tables(spark, "all-hit", [all_hit]).unionByName(
+        rows_from_tables(spark, "all-miss", [all_miss])
+    )
+    rows = merged_clean_rows(raw)
+    res = _parse_from_rows(rows, spark, ("balance_sheet", "income_statement"))
+    info = {(r.url, r.statement_type): r for r in res["parsing_info"].collect()}
+    assert set(info) == {("all-hit", "income_statement"), ("all-miss", "balance_sheet")}
+    hit, miss = info["all-hit", "income_statement"], info["all-miss", "balance_sheet"]
+    assert (hit.matched_items, hit.unmatched_items) == (3, 0)
+    assert (miss.matched_items, miss.unmatched_items) == (0, 2)
+    n_rows = {r.url: r["count"] for r in rows.groupBy("url").count().collect()}
+    assert (hit.total_rows, miss.total_rows) == (n_rows["all-hit"], n_rows["all-miss"])
+    # the summary carries the same counts
+    summ = {r.url: r for r in res["summary"].collect()}
+    assert (summ["all-hit"].matched_items, summ["all-hit"].unmatched_items) == (3, 0)
+    assert (summ["all-miss"].matched_items, summ["all-miss"].unmatched_items) == (0, 2)
+
+
 @pytest.fixture(scope="module")
 def full_results(spark, page_df):
     res = parse_statements(page_df, spark)

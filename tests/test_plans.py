@@ -116,6 +116,44 @@ def test_match_items_expected_relations(spark):
     ]
 
 
+def test_statement_kernels_evaluate_each_row_once(spark, page_df, tmp_path, monkeypatch):
+    """Writing ``parsed``, ``checks`` and ``summary`` runs the items and
+    header-map Python kernels once per input row, not once per
+    downstream read: ``items`` and the pid-joined relation are persisted,
+    and ``parsing_info`` is one aggregation over the latter. An identity
+    mapInPandas in front of each kernel adds every batch it forwards to
+    an accumulator, so a relation re-derived by a second consumer shows
+    up as a multiple of the input row count."""
+    from pdf_context_extractor_agent_spark.plans import extract
+
+    seen, inputs = {}, {}
+
+    def counted(name, kernel):
+        acc = seen[name] = spark.sparkContext.accumulator(0)
+
+        def forward(batches):
+            for b in batches:
+                acc.add(len(b))
+                yield b
+
+        def call(df):
+            inputs[name] = df
+            return kernel(df.mapInPandas(forward, df.schema))
+
+        return call
+
+    monkeypatch.setattr(extract, "extract_items", counted("items", extract.extract_items))
+    monkeypatch.setattr(extract, "header_maps", counted("header", extract.header_maps))
+    res = extract.parse_statements(page_df, spark)
+    for key in ("parsed", "checks", "summary"):
+        res[key].write.parquet(str(tmp_path / key))
+    evaluated = {k: acc.value for k, acc in seen.items()}
+    # counted after the writes: counting ``ranged`` runs the header kernel
+    expected = {k: df.count() for k, df in inputs.items()}
+    assert expected["items"] > 0 and expected["header"] > 0
+    assert evaluated == expected
+
+
 def test_pattern_dim_is_total_constant_per_slot(spark):
     """match_items' min_by/max_by slot aggregation groups on is_total,
     which is only correct while no (statement, section, standard_name)

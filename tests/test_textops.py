@@ -105,6 +105,22 @@ def test_ann_matches_brute_force_top1(spark):
     assert ann.vec_id == 7    # the query's own bucket contains itself
 
 
+def test_lsh_index_dim_probe_edges(spark):
+    """The dim probe on edge frames: an empty (or all-null) frame gets
+    the constant bucket 0, ragged vector lengths raise a ValueError
+    naming the lengths, and an explicit dim skips the probe."""
+    schema = "vec_id long, embedding array<float>"
+    empty = spark.createDataFrame([], schema)
+    assert lsh_index(empty).columns == ["vec_id", "embedding", "bucket"]
+    assert lsh_index(empty).count() == 0
+    nulls = spark.createDataFrame([(0, None), (1, None)], schema)
+    assert [r.bucket for r in lsh_index(nulls).collect()] == [0, 0]
+    ragged = spark.createDataFrame([(0, [1.0, 0.0]), (1, [1.0, 0.0, 1.0])], schema)
+    with pytest.raises(ValueError, match="lengths 2..3"):
+        lsh_index(ragged)
+    assert lsh_index(ragged, dim=2).count() == 2
+
+
 def test_ivf_topk_self_match_and_pruning(spark):
     from pdf_context_extractor_agent_spark.functions.similarity import ivf_index, ivf_topk
     from pdf_context_extractor_agent_spark.sources import load_table
