@@ -21,6 +21,7 @@ kernel); the binary column is pruned away immediately after.
 from __future__ import annotations
 
 import re
+import time
 from html import unescape
 from html.parser import HTMLParser
 from typing import Iterator
@@ -63,6 +64,10 @@ PAGE_SCHEMA = T.StructType(
                 )
             ),
         ),
+        # per-document values, repeated on every page row of the
+        # document: the parse_doc wall time and the input blob size
+        T.StructField("kernel_ms", T.LongType(), True),
+        T.StructField("doc_bytes", T.LongType(), True),
     ]
 )
 
@@ -406,10 +411,14 @@ def parse_html_doc(html_bytes: bytes) -> list[dict]:
 
 
 def extract_pages(pages_tbl: DataFrame) -> DataFrame:
-    """(url, …, html, …) → one row per page with text/lines/tables.
+    """(url, …, html, …) → one row per page with text/lines/tables, plus
+    the document's kernel wall time (``kernel_ms``) and input size
+    (``doc_bytes``) on each of its page rows.
 
-    Only (url, html) are shipped into Python — Catalyst prunes the rest
-    at the scan. Repartition/salting happens upstream (sources.pages).
+    This is the only page-extraction loop: lineage metrics aggregate
+    its per-document columns. Only (url, html) are shipped into Python —
+    Catalyst prunes the rest at the scan. Repartition/salting happens
+    upstream (sources.pages).
     """
     src = pages_tbl.select("url", "html")
 
@@ -417,15 +426,19 @@ def extract_pages(pages_tbl: DataFrame) -> DataFrame:
         for b in batches:
             rows = []
             for url, blob in zip(b["url"], b["html"]):
-                for p in parse_doc(bytes(blob)):
+                t0 = time.monotonic()
+                pages = parse_doc(bytes(blob))
+                ms = int((time.monotonic() - t0) * 1000)
+                for p in pages:
                     rows.append(
                         (url, p["page"], p["width"], p["height"],
-                         p.get("rotation", 0), p["page_text"], p["lines"], p["tables"])
+                         p.get("rotation", 0), p["page_text"], p["lines"], p["tables"],
+                         ms, len(blob))
                     )
             yield pd.DataFrame(
                 rows,
                 columns=["url", "page", "width", "height", "rotation",
-                         "page_text", "lines", "tables"],
+                         "page_text", "lines", "tables", "kernel_ms", "doc_bytes"],
             )
 
     return src.mapInPandas(kernel, schema=PAGE_SCHEMA)

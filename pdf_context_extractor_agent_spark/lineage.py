@@ -11,67 +11,33 @@ partitions. On Iceberg the append is an atomic snapshot commit; on the
 parquet fallback used here, per-run subdirectories give the same
 idempotence.
 
-The per-partition timing rides INSIDE the layout kernel (the kernel
-emits a duration column aggregated per partition afterwards) — no extra
-pass, no RDD API.
+The per-partition timing comes from the one layout kernel,
+``kernels.extract_pages``, whose page rows carry each document's
+``kernel_ms`` and ``doc_bytes``; they are aggregated per partition
+afterwards — no extra pass, no RDD API. The partition id is taken after
+the kernel: the kernel is a narrow map, so each output row stays in its
+input row's partition.
 """
 
 from __future__ import annotations
 
-import time
 import uuid
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .kernels.html_layout import PAGE_SCHEMA, parse_doc
+from .kernels.html_layout import extract_pages
 
 METRICS_SCHEMA = (
     "run_id string, partition_id int, url_count long, bytes long, "
     "duration_ms long, status string, error string"
 )
 
-_INSTRUMENTED_SCHEMA = T.StructType(
-    PAGE_SCHEMA.fields
-    + [
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("kernel_ms", T.LongType()),
-        T.StructField("doc_bytes", T.LongType()),
-    ]
-)
-
 
 def instrumented_extract_pages(pages_tbl: DataFrame) -> DataFrame:
-    """Layout kernel variant that carries partition id + per-doc timing
+    """Kernel page rows plus the partition each document was parsed in,
     so lineage metrics fall out of a cheap aggregation afterwards."""
-    src = pages_tbl.select("url", "html").withColumn(
-        "partition_id", F.spark_partition_id()
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for url, blob, pid in zip(b["url"], b["html"], b["partition_id"]):
-                t0 = time.monotonic()
-                pages = parse_doc(bytes(blob))
-                ms = int((time.monotonic() - t0) * 1000)
-                for p in pages:
-                    rows.append(
-                        (url, p["page"], p["width"], p["height"],
-                         p.get("rotation", 0), p["page_text"], p["lines"], p["tables"],
-                         int(pid), ms, len(blob))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "page", "width", "height", "rotation",
-                         "page_text", "lines", "tables",
-                         "partition_id", "kernel_ms", "doc_bytes"],
-            )
-
-    return src.mapInPandas(kernel, schema=_INSTRUMENTED_SCHEMA)
+    return extract_pages(pages_tbl).withColumn("partition_id", F.spark_partition_id())
 
 
 def partition_metrics(instrumented: DataFrame, run_id: str) -> DataFrame:
@@ -162,21 +128,6 @@ class TableStorage:
     def append(self, results: DataFrame, metrics: DataFrame) -> None:
         self._append(metrics, self.metrics_table)
         self._append(results, self.output_table)
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """Capability probe: is any configured catalog an Iceberg one?
-    (Looks for an Iceberg SparkCatalog implementation in the session
-    conf — False in this sandbox, True on a production cluster with
-    ``spark.sql.catalog.* = org.apache.iceberg.spark.SparkCatalog``.)"""
-    try:
-        confs = spark.sparkContext.getConf().getAll()
-    except Exception:
-        return False
-    return any(
-        k.startswith("spark.sql.catalog.") and "iceberg" in v.lower()
-        for k, v in confs
-    )
 
 
 def storage_for(spark: SparkSession, output: str, metrics: str):

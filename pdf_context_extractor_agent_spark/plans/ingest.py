@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.encoding import decode_pages
 from ..functions.webtext import markdown_blocks_from_pages, render_markdown
-from ..kernels import extract_pages
+from ..kernels import extract_pages, extracted_text
 from ..sources.pages import skew_partitioned, sniff_content_type
 from ..sources.warc import read_warc, warc_to_pages, wet_records
 
@@ -53,8 +53,9 @@ def ingest(
     - ``typed``:     (url, warc_ts, html, content_type)
     - ``discarded``: non-extractable records with their sniffed type
     - ``parsed``:    layout-kernel page relation (lines/tables/text)
-    - ``text``:      (url, charset, text) — decoded page text for the
-                     HTML lane, kernel page_text for PDF lanes
+    - ``text``:      (url, text) — the kernel's page text joined per url
+                     (``kernels.extracted_text``), every extractable lane
+    - ``decoded``:   (url, charset, text) — charset-decoded HTML lane
     - ``wet``:       (url, wet_record) derived-text records
     - ``markdown``:  (doc_id=url, markdown) rendered documents
     """
@@ -69,15 +70,7 @@ def ingest(
     ).select("url", "content_type")
 
     parsed = extract_pages(skew_partitioned(extractable))
-    page_text = parsed.groupBy("url").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("page", "page_text"))),
-                lambda s: s["page_text"],
-            ),
-            "\n",
-        ).alias("text")
-    )
+    page_text = extracted_text(parsed).withColumnRenamed("extracted_text", "text")
     html_lane = extractable.filter(F.col("content_type") == "text/html")
     decoded = decode_pages(html_lane, keep=("url",))
 

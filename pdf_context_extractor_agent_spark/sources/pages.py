@@ -102,7 +102,10 @@ def decomposed_pages(
     with a per-url cumulative window — page-level decomposition is
     semantics-preserving because the reference itself loops per page
     (table_extractor.py:46-63). Output schema == ``extract_pages``; a
-    test asserts byte-equal results with and without decomposition.
+    test asserts byte-equal page content with and without decomposition.
+    On a split document, ``kernel_ms`` and ``doc_bytes`` describe the
+    kernel call of the fragment a page came from (its parse time and
+    its size), not the whole document.
 
     PDF blobs pass through unsplit (their streams need the xref to
     relocate); at corpus scale they ride the one-doc jumbo lane.

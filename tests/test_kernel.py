@@ -17,6 +17,29 @@ def test_byte_identity_per_url(spark, corpus, page_df):
     assert matches == total
 
 
+def test_kernel_reports_per_document_size_and_time(spark, corpus):
+    """Every page row carries its document's input size and one kernel
+    wall-time reading, also for a garbage blob, which still yields
+    exactly one page (the never-raise contract with the new columns)."""
+    from pdf_context_extractor_agent_spark.kernels import extract_pages
+
+    junk = spark.createDataFrame(
+        [("u_junk", bytearray(b"\x00\x01junk"))], "url string, html binary"
+    )
+    src = corpus.select("url", "html").unionByName(junk)
+    pages = extract_pages(src).join(
+        src.select("url", F.length("html").alias("html_len")), "url"
+    ).cache()
+    assert pages.select("url").distinct().count() == src.count()
+    assert pages.filter(F.col("doc_bytes") != F.col("html_len")).count() == 0
+    assert pages.filter(F.col("doc_bytes").isNull()).count() == 0
+    assert pages.filter(F.col("kernel_ms").isNull() | (F.col("kernel_ms") < 0)).count() == 0
+    per_url = pages.groupBy("url").agg(F.countDistinct("kernel_ms").alias("n_ms"))
+    assert per_url.filter(F.col("n_ms") != 1).count() == 0
+    assert pages.filter(F.col("url") == "u_junk").count() == 1
+    pages.unpersist()
+
+
 def test_boilerplate_stripped():
     _, _, blob, text, _ = make_doc(6)  # plain webtext doc
     assert b"SiteBanner" in blob and b"advertisement" in blob
@@ -507,10 +530,15 @@ def test_page_decomposition_identical_output(spark):
     pages = spark.createDataFrame(
         [("u_jumbo", jumbo), ("u_small", small)], "url string, html binary"
     )
-    plain = {(r.url, r.page): r for r in extract_pages(pages).collect()}
+    # kernel_ms and doc_bytes describe each fragment's own kernel call
+    # (a wall-clock reading and the fragment's size), so only the page
+    # content columns are compared
+    cols = ["url", "page", "width", "height", "rotation", "page_text", "lines", "tables"]
+    plain = {(r.url, r.page): r for r in extract_pages(pages).select(cols).collect()}
     decomp = {
         (r.url, r.page): r
-        for r in decomposed_pages(pages, jumbo_threshold=100, pages_per_chunk=8).collect()
+        for r in decomposed_pages(pages, jumbo_threshold=100, pages_per_chunk=8)
+        .select(cols).collect()
     }
     assert set(plain) == set(decomp)
     for k in plain:

@@ -36,6 +36,28 @@ def test_checkpoint_and_resume(spark, tmp_path):
     assert m.filter(F.col("duration_ms").isNull()).count() == 0
 
 
+def test_metrics_rows_describe_their_input_partition(spark, tmp_path):
+    """Each metrics row counts the urls and html bytes of one input
+    partition: the partition id taken after the kernel is the input's,
+    and bytes are summed per document, not per page row."""
+    out = str(tmp_path / "out")
+    metrics = str(tmp_path / "metrics")
+    pg = salted_repartition(pages_df(spark, 10), 4)
+    want = {
+        r.pid: (r.urls, r.bytes)
+        for r in pg.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count("url").alias("urls"), F.sum(F.length("html")).alias("bytes"))
+        .collect()
+    }
+    run_with_checkpoint(spark, pg, out, metrics, run_id="m")
+    got = {
+        r.partition_id: (r.url_count, r.bytes)
+        for r in spark.read.parquet(metrics).collect()
+    }
+    assert len(want) > 1
+    assert got == want
+
+
 def test_rerun_is_noop(spark, tmp_path):
     out = str(tmp_path / "out")
     metrics = str(tmp_path / "metrics")
@@ -78,7 +100,7 @@ def test_table_storage_prefers_v2_snapshot_append(spark):
     """On an Iceberg catalog the SAME storage class must take the V2
     ``writeTo(t).append()`` snapshot-commit branch — asserted with a
     recording stub; the v1 fallback must not fire when V2 succeeds."""
-    from pdf_context_extractor_agent_spark.lineage import TableStorage, iceberg_available
+    from pdf_context_extractor_agent_spark.lineage import TableStorage
 
     calls = []
 
@@ -102,5 +124,3 @@ def test_table_storage_prefers_v2_snapshot_append(spark):
         "writeTo:cat.db.metrics", "v2_append",   # metrics-first ordering
         "writeTo:cat.db.out", "v2_append",
     ]
-    # and the capability probe is honest about this sandbox
-    assert iceberg_available(spark) is False

@@ -72,7 +72,7 @@ def test_text_mode_between_titles(spark):
     lines += [(12.0 * (i + 1), f"content line {i}") for i in range(13)]
     lines += [(12.0 * 14, "2、 应收账款"), (12.0 * 15, "tail line")]
     page = spark.createDataFrame(
-        [("u", 1, 612.0, 792.0, 0, "\n".join(t for _, t in lines), lines, [])],
+        [("u", 1, 612.0, 792.0, 0, "\n".join(t for _, t in lines), lines, [], 0, 0)],
         PAGE_SCHEMA,
     )
     batch = {r.number: r.text for r in extract_notes(page, "batch").collect()}
@@ -99,8 +99,8 @@ def test_merge_cross_page_notes(spark):
     p1 = [(0.0, "1、 货币资金"), (12.0, "p1 body"), (24.0, "2、 应收账款"), (36.0, "spill start")]
     p2 = [(0.0, "spill end"), (12.0, "3、 存货"), (24.0, "p2 body")]
     page = spark.createDataFrame(
-        [("u", 1, 612.0, 792.0, 0, "\n".join(t for _, t in p1), p1, []),
-         ("u", 2, 612.0, 792.0, 0, "\n".join(t for _, t in p2), p2, [])],
+        [("u", 1, 612.0, 792.0, 0, "\n".join(t for _, t in p1), p1, [], 0, 0),
+         ("u", 2, 612.0, 792.0, 0, "\n".join(t for _, t in p2), p2, [], 0, 0)],
         PAGE_SCHEMA,
     )
     notes = extract_notes(page, "between_titles")
