@@ -4,7 +4,7 @@
 SURVEY.md §2 plus the training-data ops (dedup / similarity / text
 analysis). Each SQL-expressible entry has a DuckDB twin in
 ``oracle_sql()`` with IDENTICAL column aliases; kernel-path entries
-(full extraction, LSH pipelines using xxhash64) are rows-only.
+(full extraction, Arrow/pandas kernels) are rows-only.
 
 tests/test_entry_oracle.py runs the same Spark-vs-DuckDB comparison the
 driver performs, so mismatches are caught locally first.
@@ -49,9 +49,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _q_scan_pushdown(spark, sf):
+    """Filter pushed into the lineitem scan (ship dates start 1995-01-02,
+    so the 1996 cut keeps the first year of every return flag)."""
     li = _t(spark, sf, "lineitem")
     return (
-        li.filter(F.col("l_shipdate") < F.lit("1995-01-01").cast("timestamp"))
+        li.filter(F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
         .groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n"),
@@ -122,8 +124,12 @@ def _q_semi_join(spark, sf):
 
 
 def _q_anti_join(spark, sf):
-    """NOT EXISTS: parts never shipped."""
-    p, li = _t(spark, sf, "part"), _t(spark, sf, "lineitem")
+    """NOT EXISTS: parts not shipped before 1996 (every part ships at
+    some point, so an unfiltered anti-join is empty)."""
+    p = _t(spark, sf, "part")
+    li = _t(spark, sf, "lineitem").filter(
+        F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp")
+    )
     return p.join(li, p["p_partkey"] == li["l_partkey"], "left_anti").select(
         "p_partkey", "p_brand"
     )
@@ -389,7 +395,7 @@ def _q_containment(spark, sf):
     """Asymmetric shingle containment over deterministic same-source
     pairs: the quote/boilerplate signal Jaccard misses (short doc
     embedded in long one). Candidate generation via LSH is certified by
-    q_minhash_lsh_md5; this gates the containment arithmetic itself."""
+    q_minhash_lsh_dedup; this gates the containment arithmetic itself."""
     from pdf_context_extractor_agent_spark.functions.dedup import (
         containment_pairs,
         shingles,
@@ -430,14 +436,14 @@ def _q_corpus_stats(spark, sf):
 
 
 def _q_minhash_md5(spark, sf):
-    from pdf_context_extractor_agent_spark.functions.dedup import shingles
+    """MinHash signatures alone (4 hashes): the md5 base hash per
+    shingle and the universal re-hashes, value for value."""
+    from pdf_context_extractor_agent_spark.functions.dedup import (
+        minhash_signatures,
+        shingles,
+    )
 
-    sh = shingles(_t(spark, sf, "documents"))
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(str(k)), F.col("shingle")))).alias(f"mh_{k}")
-        for k in range(4)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return minhash_signatures(shingles(_t(spark, sf, "documents")), 4)
 
 
 def _q_compression_ratio(spark, sf):
@@ -491,24 +497,28 @@ def _q_chunk_dedup(spark, sf):
     return d.select("doc_id", "n_chunks", "n_removed", F.md5("kept_text").alias("kept_md5"))
 
 
-def _q_minhash_lsh_md5(spark, sf):
-    """Full LSH pipeline (signatures → bands → pairs → verify) with
-    md5 hashing so DuckDB replicates it bit-for-bit."""
-    from pdf_context_extractor_agent_spark.functions.dedup import minhash_md5_pipeline
+def _q_minhash_lsh(spark, sf):
+    """Full MinHash-LSH pipeline (signatures → bands → pairs → verify):
+    the production functions, reproduced bit for bit by DuckDB."""
+    from pdf_context_extractor_agent_spark.functions.dedup import (
+        jaccard_verify,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        shingles,
+    )
 
-    out = minhash_md5_pipeline(_t(spark, sf, "documents"), threshold=0.5)
+    sh = shingles(_t(spark, sf, "documents"))
+    cands = lsh_candidate_pairs(minhash_signatures(sh, 16), bands=8)
+    out = jaccard_verify(cands, sh, threshold=0.5)
     return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"), "is_near_dup")
 
 
-def _q_simhash_md5(spark, sf):
-    """Full SimHash near-dup pipeline (fingerprint → bands → pairs →
-    Hamming) with md5 hashing + string fingerprints for the oracle."""
-    from pdf_context_extractor_agent_spark.functions.dedup import (
-        simhash_md5,
-        simhash_md5_near_dups,
-    )
+def _q_simhash(spark, sf):
+    """Full SimHash near-dup pipeline (fingerprint → 16-bit bands →
+    pairs → Hamming by bit_count(xor))."""
+    from pdf_context_extractor_agent_spark.functions.dedup import simhash, simhash_near_dups
 
-    return simhash_md5_near_dups(simhash_md5(_t(spark, sf, "documents")))
+    return simhash_near_dups(simhash(_t(spark, sf, "documents")))
 
 
 def _q_embed_topk(spark, sf):
@@ -566,8 +576,7 @@ def _q_cm_heavy_hitters(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# kernel-path / LSH queries (rows-only checks: xxhash64 & Arrow kernels
-# have no DuckDB twin)
+# ANN, kernel-path and multimodal queries
 # ---------------------------------------------------------------------------
 
 def _q_sq_topk(spark, sf):
@@ -580,25 +589,6 @@ def _q_sq_topk(spark, sf):
     emb = _t(spark, sf, "embeddings")
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     return sq_topk(emb, [float(x) for x in qrow[0]], k=10)
-
-
-def _q_minhash_lsh(spark, sf):
-    from pdf_context_extractor_agent_spark.functions.dedup import (
-        jaccard_verify,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        shingles,
-    )
-
-    sh = shingles(_t(spark, sf, "documents"))
-    cands = lsh_candidate_pairs(minhash_signatures(sh, 16), bands=8)
-    return jaccard_verify(cands, sh, threshold=0.5)
-
-
-def _q_simhash(spark, sf):
-    from pdf_context_extractor_agent_spark.functions.dedup import simhash, simhash_near_dups
-
-    return simhash_near_dups(simhash(_t(spark, sf, "documents")))
 
 
 def _q_ann_topk(spark, sf):
@@ -1906,12 +1896,11 @@ def _q_gopher_gate(spark, sf):
 
 def _q_dup_spans(spark, sf):
     """Substring-level exact dedup: duplicated k-token window spans
-    (canonical occurrence exempt), merged to maximal intervals.
-    md5-keyed twin of the xxhash64 production path (LSH-family
-    pattern) so DuckDB can recompute the window keys."""
+    (canonical occurrence exempt), merged to maximal intervals; windows
+    are md5-keyed, so DuckDB recomputes the window keys."""
     from pdf_context_extractor_agent_spark.functions.dedup import duplicate_spans
 
-    return duplicate_spans(_t(spark, sf, "documents"), k=8, hasher="md5")
+    return duplicate_spans(_t(spark, sf, "documents"), k=8)
 
 
 def _q_remove_dup_spans(spark, sf):
@@ -1921,7 +1910,7 @@ def _q_remove_dup_spans(spark, sf):
     )
 
     docs = _t(spark, sf, "documents")
-    return remove_duplicate_spans(docs, duplicate_spans(docs, k=8, hasher="md5"))
+    return remove_duplicate_spans(docs, duplicate_spans(docs, k=8))
 
 
 def _cmp_inputs(spark, sf):
@@ -2142,7 +2131,7 @@ def _q_det_shuffle(spark, sf):
 
 
 def _q_dup_clusters(spark, sf):
-    """Fuzzy-dedup endgame: md5-LSH near-dup pairs → connected
+    """Fuzzy-dedup endgame: MinHash-LSH near-dup pairs → connected
     components (alternating large-star/small-star, Kiveris et al.
     SoCC'14) → one canonical doc per duplicate cluster. The step the
     reference never needs at single-node scale but a 10^12-doc corpus
@@ -2150,11 +2139,11 @@ def _q_dup_clusters(spark, sf):
     (A~B, B~C but A!~C) unless resolved into clusters first."""
     from pdf_context_extractor_agent_spark.functions.dedup import (
         dedup_clusters,
-        minhash_md5_pipeline,
+        minhash_dedup,
     )
 
     docs = _t(spark, sf, "documents")
-    pairs = minhash_md5_pipeline(docs, threshold=0.5).filter("is_near_dup")
+    pairs = minhash_dedup(docs, num_hashes=16, bands=8, threshold=0.5)
     return dedup_clusters(docs, pairs)
 
 
@@ -3131,12 +3120,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_robots_wildcards": _q_robots_wildcards,
         "q_lsh_eval": _q_lsh_eval,
         "q_minhash_md5": _q_minhash_md5,
-        "q_minhash_lsh_md5": _q_minhash_lsh_md5,
-        "q_simhash_md5": _q_simhash_md5,
         "q_embed_topk": _q_embed_topk,
-        # kernel / LSH paths (rows-only)
         "q_minhash_lsh_dedup": _q_minhash_lsh,
         "q_simhash_neardup": _q_simhash,
+        # ANN / kernel paths
         "q_ann_topk": _q_ann_topk,
         "q_cosine_neardup": _q_cosine_neardup,
         "q_bitext_margin": _q_bitext_margin,
@@ -3945,21 +3932,39 @@ dim AS (
         pat = r"\b(" + "|".join(words) + r")\b"
         return f"len(regexp_extract_all(lower(text), '{pat}'))"
 
-    # --- md5 LSH twins: generate the DuckDB mirror of the Spark plan ---
-    mh_sig = ", ".join(f"min(md5('{k}' || shingle)) AS mh_{k}" for k in range(16))
+    # --- MinHash / SimHash: the DuckDB mirror of the production plan.
+    # md5_hash60(key, 0) is the one base hash; MinHash re-hashes it with
+    # the same (a_k, b_k) literals dedup.minhash_signatures embeds ---
+    from pdf_context_extractor_agent_spark.functions.dedup import (
+        MINHASH_PRIME,
+        SIMHASH_BITS,
+        minhash_coefficients,
+    )
+
+    def hash60(key: str) -> str:
+        return f"('0x' || substr(md5('0:' || {key}), 1, 15))::BIGINT"
+
+    def mh_sigs(src: str, k: int = 16) -> str:
+        mins = ", ".join(
+            f"min((x * {a} + {b}) % {MINHASH_PRIME}) AS mh_{i}"
+            for i, (a, b) in enumerate(minhash_coefficients(k))
+        )
+        return (f"SELECT doc_id, {mins} FROM (SELECT doc_id, "
+                f"{hash60('shingle')} % {MINHASH_PRIME} AS x FROM {src}) GROUP BY doc_id")
+
     band_key = "CASE band_idx " + " ".join(
-        f"WHEN {b} THEN mh_{2*b} || '|' || mh_{2*b+1}" for b in range(8)
+        f"WHEN {b} THEN mh_{2*b}::VARCHAR || '|' || mh_{2*b+1}::VARCHAR" for b in range(8)
     ) + " END"
     band_vals = ", ".join(f"({b})" for b in range(8))
     jacc = "len(list_intersect(x.s, y.s))::DOUBLE / len(list_distinct(list_concat(x.s, y.s)))"
 
-    # 60-bit simhash: bit b = bit (3 - b%4) of hex nibble b//4 of md5(word)
     sim_sums = ", ".join(
-        "sum(CASE WHEN ((strpos('0123456789abcdef', substring(h, {pos}, 1)) - 1) // {div}) % 2 = 1 "
-        "THEN 1 ELSE -1 END) AS s{b}".format(pos=1 + b // 4, div=2 ** (3 - b % 4), b=b)
-        for b in range(60)
+        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
+        for b in range(SIMHASH_BITS)
     )
-    sim_fp = "||".join(f"(CASE WHEN s{b} > 0 THEN '1' ELSE '0' END)" for b in range(60))
+    sim_fp = " + ".join(
+        f"(CASE WHEN s{b} > 0 THEN {1 << b}::BIGINT ELSE 0 END)" for b in range(SIMHASH_BITS)
+    )
 
     # --- hyperplane-LSH twins: the planes are deterministic md5-derived
     # floats, so the DuckDB oracle embeds the SAME values as literals and
@@ -3994,7 +3999,7 @@ dim AS (
     return {
         "q_scan_pushdown": """
             SELECT l_returnflag, count(*) AS n, round(sum(l_extendedprice), 2) AS sum_base
-            FROM lineitem WHERE l_shipdate < TIMESTAMP '1995-01-01'
+            FROM lineitem WHERE l_shipdate < TIMESTAMP '1996-01-01'
             GROUP BY l_returnflag""",
         "q1_pricing_summary": """
             SELECT l_returnflag, l_linestatus,
@@ -4033,7 +4038,8 @@ dim AS (
                           WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""",
         "q_anti_join": """
             SELECT p_partkey, p_brand FROM part
-            WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)""",
+            WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey
+                                AND l_shipdate < TIMESTAMP '1996-01-01')""",
         "q_pivot": """
             SELECT l_returnflag,
                    round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS qty_o,
@@ -4291,12 +4297,7 @@ dim AS (
             FROM s GROUP BY source""",
         "q_minhash_md5": f"""
             {shingle_cte}
-            SELECT doc_id,
-                   min(md5('0' || shingle)) AS mh_0,
-                   min(md5('1' || shingle)) AS mh_1,
-                   min(md5('2' || shingle)) AS mh_2,
-                   min(md5('3' || shingle)) AS mh_3
-            FROM sh GROUP BY doc_id""",
+            {mh_sigs("sh", 4)}""",
         "q_repetition": f"""
             WITH w AS (SELECT doc_id, string_split({norm}, ' ') AS w FROM documents),
             bg AS (
@@ -6219,7 +6220,7 @@ QUALIFY row_number() OVER (PARTITION BY urlkey
                               FOR i IN generate_series(1, greatest(len(w)-2, 1))]))
                        AS shingle
               FROM words),
-            sigs AS (SELECT doc_id, {mh_sig} FROM sh GROUP BY doc_id),
+            sigs AS ({mh_sigs("sh")}),
             banded AS (
               SELECT doc_id, band_idx, {band_key} AS band_key
               FROM sigs CROSS JOIN (VALUES {band_vals}) b(band_idx)),
@@ -6251,9 +6252,9 @@ QUALIFY row_number() OVER (PARTITION BY urlkey
                    (n_verified * 1000000 // greatest(n_candidates, 1))::BIGINT
                      AS cand_precision_ppm
             FROM c""",
-        "q_minhash_lsh_md5": f"""
+        "q_minhash_lsh_dedup": f"""
             {shingle_cte},
-            sigs AS (SELECT doc_id, {mh_sig} FROM sh GROUP BY doc_id),
+            sigs AS ({mh_sigs("sh")}),
             banded AS (
               SELECT doc_id, band_idx, {band_key} AS band_key
               FROM sigs CROSS JOIN (VALUES {band_vals}) b(band_idx)),
@@ -6300,7 +6301,7 @@ QUALIFY row_number() OVER (PARTITION BY urlkey
               FROM documents d JOIN clean USING (doc_id)),
             survivors AS (SELECT doc_id FROM ex WHERE NOT exact_dup),
             ssh AS (SELECT sh.* FROM sh JOIN survivors USING (doc_id)),
-            sigs AS (SELECT doc_id, {mh_sig} FROM ssh GROUP BY doc_id),
+            sigs AS ({mh_sigs("ssh")}),
             banded AS (
               SELECT doc_id, band_idx, {band_key} AS band_key
               FROM sigs CROSS JOIN (VALUES {band_vals}) b(band_idx)),
@@ -6799,7 +6800,7 @@ GROUP BY sym""",
         # per component — fine at sf0.01, never the 100 TB plan)
         "q_dup_clusters": f"""
             {shingle_cte.replace("WITH words", "WITH RECURSIVE words", 1)},
-            sigs AS (SELECT doc_id, {mh_sig} FROM sh GROUP BY doc_id),
+            sigs AS ({mh_sigs("sh")}),
             banded AS (
               SELECT doc_id, band_idx, {band_key} AS band_key
               FROM sigs CROSS JOIN (VALUES {band_vals}) b(band_idx)),
@@ -6828,18 +6829,16 @@ GROUP BY sym""",
                    count(*) OVER (PARTITION BY component) AS cluster_size,
                    doc_id = component AS is_canonical
             FROM lab""",
-        "q_simhash_md5": f"""
-            WITH words AS (
-              SELECT doc_id, md5(unnest(string_split({norm}, ' '))) AS h FROM documents),
+        "q_simhash_neardup": f"""
+            WITH w AS (SELECT doc_id, unnest(string_split({norm}, ' ')) AS word FROM documents),
+            words AS (SELECT doc_id, {hash60('word')} AS h FROM w),
             sums AS (SELECT doc_id, {sim_sums} FROM words GROUP BY doc_id),
             fps AS (SELECT doc_id, {sim_fp} AS fp FROM sums),
             banded AS (
-              SELECT doc_id, fp, band_idx, substring(fp, band_idx * 15 + 1, 15) AS band_val
+              SELECT doc_id, fp, band_idx, (fp >> (band_idx * 16)) & 65535 AS band_val
               FROM fps CROSS JOIN (VALUES (0),(1),(2),(3)) b(band_idx))
             SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-                   len(list_filter(list_transform(generate_series(1, 60),
-                                                  i -> substring(l.fp, i, 1) != substring(r.fp, i, 1)),
-                                   x -> x)) AS hamming
+                   bit_count(xor(l.fp, r.fp))::INT AS hamming
             FROM banded l JOIN banded r
               ON l.band_idx = r.band_idx AND l.band_val = r.band_val
              AND l.doc_id < r.doc_id""",

@@ -21,9 +21,10 @@ Probe has two shapes:
   pandas UDF; zero shuffle, zero explode. Differential-tested against
   the relational probe.
 
-Hashing is md5-positional (first 15 hex nibbles → 60-bit int, mod m)
-so Spark, DuckDB, and hashlib all compute identical positions — the
-same oracle-twin trick as ``dedup.minhash_md5_signatures``.
+Hash position j is ``sketch.md5_hash60(key, j) mod m`` (first 15 hex
+nibbles of md5('<j>:<key>') → 60-bit int), so Spark, DuckDB, and
+hashlib all compute identical positions — the same base hash the
+MinHash and SimHash pipelines use.
 """
 
 from __future__ import annotations
@@ -37,19 +38,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _md5_position(key: Column, seed: int, m_bits: int) -> Column:
-    """Hash position j: first 15 hex nibbles of md5('<j>:<key>') as a
-    60-bit integer, mod m. Exact in Spark (conv), DuckDB ('0x'||…
-    cast), and Python (int(hex, 16))."""
-    h = F.md5(F.concat(F.lit(f"{seed}:"), key))
-    return (F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % m_bits).alias(
-        f"pos_{seed}"
-    )
+from .sketch import md5_hash60
 
 
 def _positions(key: Column, k: int, m_bits: int) -> list[Column]:
-    return [_md5_position(key, j, m_bits) for j in range(k)]
+    return [md5_hash60(key, j) % m_bits for j in range(k)]
 
 
 def bloom_build(
@@ -129,7 +122,7 @@ def bloom_probe_joined(
     out = df
     hits = []
     for j in range(k):
-        pos = _md5_position(F.col(key_col), j, m_bits)
+        pos = md5_hash60(F.col(key_col), j) % m_bits
         out = out.withColumns(
             {
                 f"_bw{j}": (pos / 64).cast("long"),

@@ -12,15 +12,23 @@ Four families, each with a distinct scale profile:
                  for the ANN path).
 
 Everything is built-in column algebra: shingling is `split`+`transform`+
-`sequence`, hashing is `xxhash64`/`md5`, signatures are `groupBy(min)`,
-banding is `substring`/bit-slicing, bucket joins are plain equi-joins
-(AQE handles bucket skew).
+`sequence`, signatures are `groupBy(min)`, banding is string keys /
+bit-slicing, bucket joins are plain equi-joins (AQE handles bucket
+skew). MinHash and SimHash hash each shingle / word once with
+``sketch.md5_hash60``; MinHash then applies k exact integer universal
+hashes ``(a_k·x + b_k) mod (2^31 − 1)`` — so Spark, DuckDB and Python
+compute the same signatures, bands and fingerprints bit for bit, and
+the DuckDB oracles check the production pipelines themselves.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .sketch import md5_hash60
 
 
 def normalized_text(text: Column) -> Column:
@@ -53,63 +61,96 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # shingling + MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document (posexplode over a
-    sliding window expressed with `sequence` + `slice`)."""
-    words = F.split(normalized_text(F.col(text_col)), " ")
+def shingle_array(text: Column, n: int = 3) -> Column:
+    """Word n-gram shingles of one text, in order: a sliding window
+    expressed with `sequence` + `slice` (fewer than n words → one)."""
+    words = F.split(normalized_text(text), " ")
     idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
-    sh = F.transform(idx, lambda i: F.array_join(F.slice(words, i, n), " "))
+    return F.transform(idx, lambda i: F.array_join(F.slice(words, i, n), " "))
+
+
+def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per document, one row each."""
+    sh = shingle_array(F.col(text_col), n)
     return (
         docs.select(F.col(id_col).alias("doc_id"), F.explode(F.array_distinct(sh)).alias("shingle"))
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 16, seed: int = 42
-) -> DataFrame:
-    """MinHash signature per doc: for k seeds, min over shingles of
-    ``xxhash64(shingle, seed_k)``. One groupBy, k partial-aggregated
-    mins — no per-row Python, no all-pairs anything."""
+# Mersenne prime 2^31 - 1: a·x + b < 2^62 for a, b, x < P, so every
+# universal hash is exact long arithmetic under ANSI mode on any engine
+MINHASH_PRIME = (1 << 31) - 1
+
+
+def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
+    """The ``(a_k, b_k)`` of the k universal hashes ``(a_k·x + b_k) mod P``
+    — fixed md5-derived constants (a_k ≥ 1), embedded as literals in the
+    Spark plan and the DuckDB oracle alike."""
+    out = []
+    for k in range(num_hashes):
+        d = hashlib.md5(f"minhash:{k}".encode()).digest()
+        a = 1 + int.from_bytes(d[:8], "big") % (MINHASH_PRIME - 1)
+        out.append((a, int.from_bytes(d[8:], "big") % MINHASH_PRIME))
+    return out
+
+
+def minhash_base(shingle: Column) -> Column:
+    """The one md5 per shingle: ``md5_hash60(shingle, 0) mod P``."""
+    return md5_hash60(shingle, 0) % MINHASH_PRIME
+
+
+def minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """MinHash signature per doc: one md5 base hash x per shingle, then
+    for each k the min over shingles of ``(a_k·x + b_k) mod P``. One
+    groupBy, k partial-aggregated mins — no per-row Python, no all-pairs
+    anything, and bit-identical in DuckDB and plain Python."""
+    x = sh.select("doc_id", minhash_base(F.col("shingle")).alias("_x"))
     aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(seed + k))).alias(f"mh_{k}")
-        for k in range(num_hashes)
+        F.min((F.col("_x") * a + b) % MINHASH_PRIME).alias(f"mh_{k}")
+        for k, (a, b) in enumerate(minhash_coefficients(num_hashes))
     ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return x.groupBy("doc_id").agg(*aggs)
+
+
+def lsh_bands(mh: list[Column], bands: int) -> Column:
+    """``array<struct<band_idx, band_key>>`` over a signature: band b's key
+    is its r = k/bands members as decimal strings joined by ``'|'`` — no
+    re-hash, so DuckDB computes the same key."""
+    if len(mh) % bands != 0:
+        raise ValueError(
+            f"{len(mh)} minhashes do not band evenly into {bands} "
+            "(leftover hashes would be silently dropped, weakening recall)"
+        )
+    r = len(mh) // bands
+    return F.array(*[
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.concat_ws("|", *[c.cast("string") for c in mh[b * r:(b + 1) * r]]).alias("band_key"),
+        )
+        for b in range(bands)
+    ])
 
 
 def lsh_candidate_pairs(sigs: DataFrame, bands: int = 4) -> DataFrame:
     """Band the signature, bucket-join docs sharing any band.
 
     rows = bands × docs; the self-join is an equi-join on
-    (band_idx, band_hash) so only same-bucket docs ever meet. Output is
+    (band_idx, band_key) so only same-bucket docs ever meet. Output is
     unordered candidate pairs (a < b), possibly repeated once per shared
     band — intentionally NOT ``.distinct()``-ed: the verify step's
     per-pair aggregation collapses duplicates, so deduping here would
     spend a wide exchange on the pair set for nothing.
     """
-    mh_cols = [c for c in sigs.columns if c.startswith("mh_")]
-    if len(mh_cols) % bands != 0:
-        raise ValueError(
-            f"{len(mh_cols)} minhashes do not band evenly into {bands} "
-            "(leftover hashes would be silently dropped, weakening recall)"
-        )
-    rows_per_band = len(mh_cols) // bands
-    band_structs = []
-    for b in range(bands):
-        members = [F.col(c) for c in mh_cols[b * rows_per_band:(b + 1) * rows_per_band]]
-        band_structs.append(
-            F.struct(F.lit(b).alias("band_idx"), F.xxhash64(*members).alias("band_hash"))
-        )
+    mh = [F.col(c) for c in sigs.columns if c.startswith("mh_")]
     banded = sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc_id", "band.band_idx", "band.band_hash")
-    left = banded.alias("l")
-    right = banded.alias("r")
+        "doc_id", F.explode(lsh_bands(mh, bands)).alias("band")
+    ).select("doc_id", "band.band_idx", "band.band_key")
+    left, right = banded.alias("l"), banded.alias("r")
     return (
         left.join(
             right,
             (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col("l.band_key") == F.col("r.band_key"))
             & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
         .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
@@ -217,13 +258,13 @@ def minhash_dedup(
 
     Default geometry (k=32, b=8, r=4) chosen from the :func:`lsh_eval`
     sweep at the 0.8-Jaccard operating point (SCALE.md "LSH band
-    geometry"): measured 100 % recall on the graded-twin eval set
-    (theoretical 1-(1-0.8^4)^8 ≈ 0.985 at s = 0.8 exactly) at ~half
-    the candidate volume of the r=2 geometries; the old (16, 4)
-    default measured 96.6 % recall — banding false-negatives are
-    silent data loss in a dedup pipeline, so recall wins. Callers
-    targeting a lower threshold should re-band: at 0.5, (16, 8, r=2)
-    is the measured sweet spot."""
+    geometry", ``scripts/lsh_band_sweep.py``): measured 100 % recall on
+    the graded-twin eval set (theoretical 1-(1-0.8^4)^8 ≈ 0.985 at
+    s = 0.8 exactly, against 0.878 for the old (16, 4) default) at
+    ~half the candidate volume of the r=2 geometries — banding
+    false-negatives are silent data loss in a dedup pipeline, so
+    recall wins. Callers targeting a lower threshold should re-band:
+    at 0.5, (16, 8, r=2) is the measured sweet spot."""
     sh = shingles(docs, id_col, text_col, n)
     sigs = minhash_signatures(sh, num_hashes)
     cands = lsh_candidate_pairs(sigs, bands)
@@ -231,164 +272,36 @@ def minhash_dedup(
 
 
 # ---------------------------------------------------------------------------
-# md5-keyed oracle twins of the full LSH pipelines
-#
-# The production path hashes with xxhash64 (fast, JVM-side) which no
-# external engine reproduces; these twins swap ONLY the hash primitive
-# for md5 (bit-identical across Spark and DuckDB) so the complete
-# signatures → bands → candidate-pairs → verify pipeline is
-# oracle-checkable end to end. Plan shape is identical to the
-# production functions above — same groupBy(min) signatures, same
-# banded equi-join, same verify-after — so a green oracle here
-# certifies the banding/join/verify logic, not just the hashing.
-# ---------------------------------------------------------------------------
-
-def minhash_md5_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """MinHash signature with md5-string hashing (seed = prefix)."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(str(k)), F.col("shingle")))).alias(f"mh_{k}")
-        for k in range(num_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def lsh_candidate_pairs_keyed(sigs: DataFrame, bands: int = 8) -> DataFrame:
-    """Band the signature by CONCATENATION (no re-hash): the band key is
-    the joined member strings, so any engine computes the same key. Same
-    bucket equi-join as :func:`lsh_candidate_pairs`."""
-    mh_cols = [c for c in sigs.columns if c.startswith("mh_")]
-    if len(mh_cols) % bands != 0:
-        raise ValueError(
-            f"{len(mh_cols)} minhashes do not band evenly into {bands} "
-            "(leftover hashes would be silently dropped, weakening recall)"
-        )
-    rows_per_band = len(mh_cols) // bands
-    band_structs = []
-    for b in range(bands):
-        members = [F.col(c) for c in mh_cols[b * rows_per_band:(b + 1) * rows_per_band]]
-        band_structs.append(
-            F.struct(F.lit(b).alias("band_idx"), F.concat_ws("|", *members).alias("band_key"))
-        )
-    banded = sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc_id", "band.band_idx", "band.band_key")
-    left, right = banded.alias("l"), banded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-    )
-
-
-def minhash_md5_pipeline(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Full md5-keyed shingle→minhash→band→pairs→verify pipeline."""
-    sh = shingles(docs, id_col, text_col, n)
-    cands = lsh_candidate_pairs_keyed(minhash_md5_signatures(sh, num_hashes), bands)
-    return jaccard_verify(cands, sh, threshold)
-
-
-SIMHASH_MD5_BITS = 60  # 15 hex nibbles — fits a signed long on any engine
-
-
-def simhash_md5(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """60-bit SimHash over md5 word hashes, fingerprint as a '0'/'1'
-    STRING so banding and Hamming distance are pure string ops any
-    engine reproduces. Bit b = bit (3 - b%4) of hex nibble b//4."""
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("word"),
-    ).withColumn("h", F.md5("word"))
-    aggs = []
-    for b in range(SIMHASH_MD5_BITS):
-        nib = F.conv(F.substring("h", 1 + b // 4, 1), 16, 10).cast("int")
-        bit = F.shiftright(nib, 3 - b % 4).bitwiseAND(F.lit(1))
-        aggs.append(F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"s{b}"))
-    sums = words.groupBy("doc_id").agg(*aggs)
-    fp = F.concat(*[
-        F.when(F.col(f"s{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for b in range(SIMHASH_MD5_BITS)
-    ])
-    return sums.select("doc_id", fp.alias("fp_bits"))
-
-
-def simhash_md5_near_dups(fps: DataFrame, band_chars: int = 15) -> DataFrame:
-    """Candidate pairs sharing any 15-char band of the bit string, with
-    exact Hamming distance via per-position char compare."""
-    n_bands = SIMHASH_MD5_BITS // band_chars
-    bands = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.substring("fp_bits", b * band_chars + 1, band_chars).alias("band_val"),
-        )
-        for b in range(n_bands)
-    ]
-    banded = fps.select(
-        "doc_id", "fp_bits", F.explode(F.array(*bands)).alias("band")
-    ).select("doc_id", "fp_bits", "band.band_idx", "band.band_val")
-    l, r = banded.alias("l"), banded.alias("r")
-    hamming = F.size(
-        F.filter(
-            F.zip_with(
-                F.split(F.col("l.fp_bits"), ""),
-                F.split(F.col("r.fp_bits"), ""),
-                lambda x, y: x != y,
-            ),
-            lambda d: d,
-        )
-    )
-    return (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-    )
-
-
-# ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash: per word-hash bit, sum ±1 across the doc's words;
-    fingerprint bit b is 1 iff the sum is positive.
+SIMHASH_BITS = 60  # the md5_hash60 word hash; fits a signed long on any engine
 
-    Expressed as one explode + 64 conditional sums (partial-aggregated
-    map-side; the shuffle carries 64 longs per doc).
+
+def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """60-bit SimHash: per bit of each word's ``md5_hash60(word, 0)``, sum
+    ±1 across the doc's words; fingerprint bit b is 1 iff the sum is
+    positive. Kept as a nonnegative long in ``simhash64`` (bits 60-63 are
+    0), so every engine reproduces it exactly.
+
+    Expressed as one explode + 60 conditional sums (partial-aggregated
+    map-side; the shuffle carries 60 longs per doc).
     """
     words = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("word"),
-    ).withColumn("wh", F.xxhash64("word"))
+    ).select("doc_id", md5_hash60(F.col("word"), 0).alias("wh"))
     aggs = [
         F.sum(
             F.when(F.shiftright(F.col("wh"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{b}")
-        for b in range(64)
+        for b in range(SIMHASH_BITS)
     ]
     sums = words.groupBy("doc_id").agg(*aggs)
-    fp = F.lit(0).cast("long")
-    for b in range(64):
-        fp = fp + F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long") * (2 ** b if b < 63 else -(2 ** 63))).otherwise(0)
+    fp = sum(
+        F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(0)
+        for b in range(SIMHASH_BITS)
+    )
     return sums.select("doc_id", fp.alias("simhash64"))
 
 
@@ -621,11 +534,8 @@ def dedup_clusters(
 # gaps-and-islands window pass on the doc key.
 # ---------------------------------------------------------------------------
 
-def _window_occurrences(
-    docs: DataFrame, id_col: str, text_col: str, k: int, hasher: str = "xxhash64"
-) -> DataFrame:
-    """(doc_id, pos, h): hash of every overlapping k-token window."""
-    h_fn = F.md5 if hasher == "md5" else F.xxhash64
+def _window_occurrences(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(doc_id, pos, h): md5 of every overlapping k-token window."""
     toks = F.split(normalized_text(F.col(text_col)), " ")
     df = docs.select(
         F.col(id_col).cast("long").alias("doc_id"), toks.alias("w")
@@ -634,14 +544,13 @@ def _window_occurrences(
     # the lambda — the repetition_features O(n²) lesson)
     wins = F.transform(
         F.sequence(F.lit(0), F.size("w") - k),
-        lambda i: h_fn(F.array_join(F.slice("w", i + 1, k), " ")),
+        lambda i: F.md5(F.array_join(F.slice("w", i + 1, k), " ")),
     )
     return df.select("doc_id", F.posexplode(wins).alias("pos", "h"))
 
 
 def duplicate_spans(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8,
-    hasher: str = "xxhash64",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8
 ) -> DataFrame:
     """Maximal duplicated token spans per document.
 
@@ -651,13 +560,10 @@ def duplicate_spans(
     → ``(doc_id, span_start, span_end, n_windows)`` with token-index
     bounds, end exclusive.
 
-    ``hasher``: ``xxhash64`` (default) keys the shuffle on 8-byte JVM
-    hashes — at 10^12 windows expect a handful of 64-bit collisions
-    (≈ sqrt-birthday), each worth one spuriously-flagged window; the
-    ``md5`` twin (128-bit, cross-engine) is collision-free in practice
-    and is what the DuckDB oracle certifies (the LSH family's pattern).
+    Windows are keyed on their 128-bit md5 — collision-free in practice
+    even at 10^12 windows, and the key DuckDB recomputes.
     """
-    occ = _window_occurrences(docs, id_col, text_col, k, hasher)
+    occ = _window_occurrences(docs, id_col, text_col, k)
     canon = occ.groupBy("h").agg(
         F.count("*").alias("cnt"),
         F.min(F.struct("doc_id", "pos")).alias("first"),
@@ -989,9 +895,7 @@ def lsh_eval(
     Jaccard ≥ any positive threshold implies one), so the all-pairs
     scan is the shingle-level equi-join, never a cartesian."""
     sh = shingles(docs, id_col, text_col, n)
-    cands = lsh_candidate_pairs_keyed(
-        minhash_md5_signatures(sh, num_hashes), bands
-    ).distinct()
+    cands = lsh_candidate_pairs(minhash_signatures(sh, num_hashes), bands).distinct()
     verified = jaccard_verify(cands, sh, threshold).filter("is_near_dup")
 
     sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")

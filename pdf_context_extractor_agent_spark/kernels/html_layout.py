@@ -65,8 +65,8 @@ PAGE_SCHEMA = T.StructType(
             ),
         ),
         # per-document values, repeated on every page row of the
-        # document: the parse_doc wall time and the input blob size
-        T.StructField("kernel_ms", T.LongType(), True),
+        # document: the parse_doc wall time (µs) and the input blob size
+        T.StructField("kernel_us", T.LongType(), True),
         T.StructField("doc_bytes", T.LongType(), True),
     ]
 )
@@ -412,7 +412,7 @@ def parse_html_doc(html_bytes: bytes) -> list[dict]:
 
 def extract_pages(pages_tbl: DataFrame) -> DataFrame:
     """(url, …, html, …) → one row per page with text/lines/tables, plus
-    the document's kernel wall time (``kernel_ms``) and input size
+    the document's kernel wall time in microseconds (``kernel_us``) and input size
     (``doc_bytes``) on each of its page rows.
 
     This is the only page-extraction loop: lineage metrics aggregate
@@ -426,19 +426,19 @@ def extract_pages(pages_tbl: DataFrame) -> DataFrame:
         for b in batches:
             rows = []
             for url, blob in zip(b["url"], b["html"]):
-                t0 = time.monotonic()
+                t0 = time.monotonic_ns()
                 pages = parse_doc(bytes(blob))
-                ms = int((time.monotonic() - t0) * 1000)
+                us = (time.monotonic_ns() - t0) // 1000
                 for p in pages:
                     rows.append(
                         (url, p["page"], p["width"], p["height"],
                          p.get("rotation", 0), p["page_text"], p["lines"], p["tables"],
-                         ms, len(blob))
+                         us, len(blob))
                     )
             yield pd.DataFrame(
                 rows,
                 columns=["url", "page", "width", "height", "rotation",
-                         "page_text", "lines", "tables", "kernel_ms", "doc_bytes"],
+                         "page_text", "lines", "tables", "kernel_us", "doc_bytes"],
             )
 
     return src.mapInPandas(kernel, schema=PAGE_SCHEMA)

@@ -13,7 +13,7 @@ idempotence.
 
 The per-partition timing comes from the one layout kernel,
 ``kernels.extract_pages``, whose page rows carry each document's
-``kernel_ms`` and ``doc_bytes``; they are aggregated per partition
+``kernel_us`` and ``doc_bytes``; they are aggregated per partition
 afterwards — no extra pass, no RDD API. The partition id is taken after
 the kernel: the kernel is a narrow map, so each output row stays in its
 input row's partition.
@@ -43,13 +43,13 @@ def instrumented_extract_pages(pages_tbl: DataFrame) -> DataFrame:
 def partition_metrics(instrumented: DataFrame, run_id: str) -> DataFrame:
     """One lineage row per partition (FIXTURES.md §2 metrics schema)."""
     per_doc = instrumented.groupBy("partition_id", "url").agg(
-        F.first("kernel_ms").alias("kernel_ms"), F.first("doc_bytes").alias("doc_bytes")
+        F.first("kernel_us").alias("kernel_us"), F.first("doc_bytes").alias("doc_bytes")
     )
     return per_doc.groupBy("partition_id").agg(
         F.lit(run_id).alias("run_id"),
         F.count("*").alias("url_count"),
         F.sum("doc_bytes").alias("bytes"),
-        F.sum("kernel_ms").alias("duration_ms"),
+        F.expr("sum(kernel_us) div 1000").alias("duration_ms"),
         F.lit("ok").alias("status"),
         F.lit(None).cast("string").alias("error"),
     ).select("run_id", "partition_id", "url_count", "bytes", "duration_ms", "status", "error")

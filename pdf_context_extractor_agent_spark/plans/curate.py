@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dedup import dedup_clusters, exact_dedup, minhash_md5_pipeline
+from ..functions.dedup import dedup_clusters, exact_dedup, minhash_dedup
 from ..functions.quality import lang_id, quality_features, repetition_features
 from ..functions.sampling import assign_splits
 
@@ -165,10 +165,10 @@ def curate(
     ex_keep = ex.filter(~F.col("is_duplicate")).select(id_col)
     survivors = clean.join(ex_keep, id_col, "semi")
 
-    pairs = minhash_md5_pipeline(
+    pairs = minhash_dedup(
         survivors.select(id_col, text_col), id_col, text_col,
-        threshold=near_dup_threshold,
-    ).filter("is_near_dup")
+        num_hashes=16, bands=8, threshold=near_dup_threshold,
+    )
     clusters = dedup_clusters(survivors.select(id_col), pairs, id_col)
 
     corpus = (

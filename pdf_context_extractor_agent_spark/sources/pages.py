@@ -103,7 +103,7 @@ def decomposed_pages(
     semantics-preserving because the reference itself loops per page
     (table_extractor.py:46-63). Output schema == ``extract_pages``; a
     test asserts byte-equal page content with and without decomposition.
-    On a split document, ``kernel_ms`` and ``doc_bytes`` describe the
+    On a split document, ``kernel_us`` and ``doc_bytes`` describe the
     kernel call of the fragment a page came from (its parse time and
     its size), not the whole document.
 

@@ -8,9 +8,12 @@ makes these first-class here:
   unchanged on a stream, micro-batch or continuous);
 * watermarked windowed aggregation for ingest monitoring with late
   data;
-* a custom stateful operator (``applyInPandasWithState``): cross-batch
+* custom stateful operators (``applyInPandasWithState``): cross-batch
   exact dedup — first occurrence of a content hash passes, later
-  arrivals are dropped, state carries the winner url per hash.
+  arrivals are dropped, state carries the winner url per hash — and
+  cross-batch MinHash-LSH near-dup, whose per-row signatures and band
+  keys are the batch ``functions.dedup`` ones (same md5 base hash, same
+  universal re-hashes), so a doc lands in the same buckets either way.
 
 All sinks are append-compatible; checkpointing uses the standard
 streaming checkpoint dir (exactly-once with a replayable source).
@@ -21,7 +24,7 @@ from __future__ import annotations
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -140,7 +143,7 @@ _NEARDUP_STATE = T.StructType(
     ]
 )
 # per-bucket state cap: an LSH bucket at web scale is small by design
-# (the band hash spreads docs over 2^64 buckets); a degenerate bucket
+# (the band key spreads docs over (2^31 − 1)^r buckets); a degenerate bucket
 # (e.g. empty-text docs all sharing one signature) must not grow state
 # without bound, so arrivals past the cap still emit pairs against the
 # stored members but are not appended.
@@ -187,7 +190,6 @@ def streaming_minhash_neardup(
     pages_stream: DataFrame,
     num_hashes: int = 16,
     bands: int = 4,
-    seed: int = 42,
     n: int = 3,
     threshold: float = 0.0,
     text_col: str = "text",
@@ -199,15 +201,16 @@ def streaming_minhash_neardup(
     bucket self-join — neither composes incrementally on a stream. This
     operator restates it stream-natively with identical hash semantics:
 
-    * the signature is computed PER ROW (``array_min`` over a transform
-      of the row's own shingle array — a doc's shingles never leave its
-      row, so no streaming aggregation is needed), with the exact same
-      ``xxhash64(shingle, seed+k)`` values as the batch ``minhash_signatures``;
-    * band hashes are the same ``xxhash64(mh_b*r .. mh_b*r+r-1)`` the
-      batch ``lsh_candidate_pairs`` computes, so a doc lands in the SAME
-      buckets streaming or batch;
+    * the signature is computed PER ROW (a doc's shingles never leave its
+      row, so no streaming aggregation is needed): the md5 base array
+      ``minhash_base(shingle)`` once per row, then for each of the k
+      universal hashes an ``array_min`` over that array — the exact
+      values the batch ``minhash_signatures`` computes;
+    * band keys come from the same ``lsh_bands`` the batch
+      ``lsh_candidate_pairs`` uses, so a doc lands in the SAME buckets
+      streaming or batch;
     * the bucket self-join becomes per-bucket state
-      (``applyInPandasWithState`` keyed on (band_idx, band_hash)): each
+      (``applyInPandasWithState`` keyed on (band_idx, band_key)): each
       arrival emits a pair against every stored member with estimated
       Jaccard ≥ ``threshold`` (matching-component fraction — the standard
       MinHash estimate), then joins the state.
@@ -219,34 +222,27 @@ def streaming_minhash_neardup(
     Like the batch generator, a pair sharing several bands is emitted
     once per band; the downstream per-pair aggregation collapses these.
     """
-    from ..functions.dedup import normalized_text
+    from ..functions.dedup import (
+        MINHASH_PRIME,
+        lsh_bands,
+        minhash_base,
+        minhash_coefficients,
+        shingle_array,
+    )
 
-    words = F.split(normalized_text(F.col(text_col)), " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
-    sh = F.transform(idx, lambda i: F.array_join(F.slice(words, i, n), " "))
-    mh_cols = [
-        F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(seed + k)))).alias(
-            f"mh_{k}"
-        )
-        for k in range(num_hashes)
-    ]
-    sigs = pages_stream.select(F.col("url"), *mh_cols)
-    rows_per_band = num_hashes // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.xxhash64(
-                *[F.col(f"mh_{k}") for k in range(b * rows_per_band, (b + 1) * rows_per_band)]
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
+    sh = shingle_array(F.col(text_col), n)
+    xs = pages_stream.select("url", F.transform(sh, minhash_base).alias("_xs"))
+
+    def universal(a: int, b: int) -> Column:
+        return F.array_min(F.transform("_xs", lambda x: (x * a + b) % MINHASH_PRIME))
+
+    sig = F.array(*[universal(a, b) for a, b in minhash_coefficients(num_hashes)])
+    sigs = xs.select("url", sig.alias("sig"))
+    mh = [F.col("sig")[k] for k in range(num_hashes)]
     keyed = sigs.select(
-        "url",
-        F.array(*[F.col(f"mh_{k}") for k in range(num_hashes)]).alias("sig"),
-        F.explode(F.array(*band_structs)).alias("band"),
-    ).select("url", F.col("band.band_idx"), F.col("band.band_hash"), "sig")
-    return keyed.groupBy("band_idx", "band_hash").applyInPandasWithState(
+        "url", "sig", F.explode(lsh_bands(mh, bands)).alias("band")
+    ).select("url", F.col("band.band_idx"), F.col("band.band_key"), "sig")
+    return keyed.groupBy("band_idx", "band_key").applyInPandasWithState(
         _neardup_threshold_holder(threshold),
         outputStructType=_NEARDUP_OUT,
         stateStructType=_NEARDUP_STATE,

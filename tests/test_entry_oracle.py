@@ -57,6 +57,7 @@ def test_query_matches_oracle(spark, duck, name):
         f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(odf.columns)}"
     )
     assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} vs {len(odf)}"
+    assert len(sdf) > 0, f"{name}: empty on both engines, so the match certifies nothing"
     # The driver's hash compare stringifies values exactly, so an int64-vs-float64
     # dtype split (e.g. DuckDB HUGEINT window sums materializing as float64) is a
     # hash mismatch even when every value agrees.  Mirror that strictness here:
@@ -90,8 +91,7 @@ def test_every_oracle_has_query():
 
 @pytest.mark.parametrize(
     "name",
-    ["q_minhash_lsh_dedup", "q_simhash_neardup", "q_ann_topk", "q_cosine_neardup",
-     "q_multimodal_features", "q_extract_text_identity"],
+    ["q_ann_topk", "q_cosine_neardup", "q_multimodal_features", "q_extract_text_identity"],
 )
 def test_rows_only_queries_run(spark, name):
     df = QUERIES[name](spark, "/root/testdata/sf0.001")

@@ -33,9 +33,11 @@ def test_kernel_reports_per_document_size_and_time(spark, corpus):
     assert pages.select("url").distinct().count() == src.count()
     assert pages.filter(F.col("doc_bytes") != F.col("html_len")).count() == 0
     assert pages.filter(F.col("doc_bytes").isNull()).count() == 0
-    assert pages.filter(F.col("kernel_ms").isNull() | (F.col("kernel_ms") < 0)).count() == 0
-    per_url = pages.groupBy("url").agg(F.countDistinct("kernel_ms").alias("n_ms"))
-    assert per_url.filter(F.col("n_ms") != 1).count() == 0
+    assert pages.filter(F.col("kernel_us").isNull() | (F.col("kernel_us") < 0)).count() == 0
+    # microseconds, not floored ms: every real document reads > 0
+    assert pages.filter((F.col("url") != "u_junk") & (F.col("kernel_us") <= 0)).count() == 0
+    per_url = pages.groupBy("url").agg(F.countDistinct("kernel_us").alias("n_us"))
+    assert per_url.filter(F.col("n_us") != 1).count() == 0
     assert pages.filter(F.col("url") == "u_junk").count() == 1
     pages.unpersist()
 
@@ -530,7 +532,7 @@ def test_page_decomposition_identical_output(spark):
     pages = spark.createDataFrame(
         [("u_jumbo", jumbo), ("u_small", small)], "url string, html binary"
     )
-    # kernel_ms and doc_bytes describe each fragment's own kernel call
+    # kernel_us and doc_bytes describe each fragment's own kernel call
     # (a wall-clock reading and the fragment's size), so only the page
     # content columns are compared
     cols = ["url", "page", "width", "height", "rotation", "page_text", "lines", "tables"]

@@ -58,6 +58,25 @@ def test_metrics_rows_describe_their_input_partition(spark, tmp_path):
     assert got == want
 
 
+def test_metrics_duration_is_summed_kernel_microseconds(spark):
+    """duration_ms is the partition's summed per-document kernel_us,
+    integer-divided once — a one-document partition of a sub-millisecond
+    parse is not floored to 0 document by document."""
+    from pdf_context_extractor_agent_spark.lineage import (
+        instrumented_extract_pages,
+        partition_metrics,
+    )
+
+    inst = instrumented_extract_pages(salted_repartition(pages_df(spark, 10), 4)).persist()
+    want: dict[int, int] = {}
+    for r in inst.select("partition_id", "url", "kernel_us").distinct().collect():
+        want[r.partition_id] = want.get(r.partition_id, 0) + r.kernel_us
+    got = {r.partition_id: r.duration_ms for r in partition_metrics(inst, "d").collect()}
+    inst.unpersist()
+    assert len(want) > 1
+    assert got == {pid: us // 1000 for pid, us in want.items()}
+
+
 def test_rerun_is_noop(spark, tmp_path):
     out = str(tmp_path / "out")
     metrics = str(tmp_path / "metrics")

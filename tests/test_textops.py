@@ -1,12 +1,16 @@
 """Training-data operator tests: dedup families, similarity search,
 multimodal kernels, labels and sinks."""
 
+import hashlib
+
 import pyspark.sql.functions as F
 import pytest
 
 from pdf_context_extractor_agent_spark.functions.dedup import (
+    MINHASH_PRIME,
     exact_dedup,
     lsh_candidate_pairs,
+    minhash_coefficients,
     minhash_dedup,
     minhash_signatures,
     shingles,
@@ -66,6 +70,48 @@ def test_minhash_identical_signatures(spark, docs):
             for r in minhash_signatures(shingles(docs), 8).collect()}
     assert sigs[0] == sigs[1]
     assert sigs[0] != sigs[3]
+
+
+def _py_hash60(key: str) -> int:
+    return int(hashlib.md5(f"0:{key}".encode()).hexdigest()[:15], 16)
+
+
+def test_minhash_signatures_match_python(spark, docs):
+    """One md5 base hash per shingle, then k exact universal hashes:
+    plain-Python hashlib arithmetic gives the same signature values."""
+    coeffs = minhash_coefficients(8)
+    assert all(1 <= a < MINHASH_PRIME and 0 <= b < MINHASH_PRIME for a, b in coeffs)
+    sh = shingles(docs)
+    by_doc: dict[int, list[str]] = {}
+    for r in sh.collect():
+        by_doc.setdefault(r.doc_id, []).append(r.shingle)
+    want = {
+        d: tuple(
+            min((_py_hash60(s) % MINHASH_PRIME * a + b) % MINHASH_PRIME for s in ss)
+            for a, b in coeffs
+        )
+        for d, ss in by_doc.items()
+    }
+    got = {
+        r.doc_id: tuple(r[f"mh_{k}"] for k in range(8))
+        for r in minhash_signatures(sh, 8).collect()
+    }
+    assert got == want and len(got) == 6
+
+
+def test_simhash_matches_python(spark, docs):
+    """60 ±1 bit sums over md5_hash60 word hashes, positive sum → bit set."""
+    want = {}
+    for r in docs.collect():
+        words = " ".join(r.text.strip().split()).lower().split(" ")
+        fp = 0
+        for b in range(60):
+            if sum(1 if _py_hash60(w) >> b & 1 else -1 for w in words) > 0:
+                fp |= 1 << b
+        want[r.doc_id] = fp
+    got = {r.doc_id: r.simhash64 for r in simhash(docs).collect()}
+    assert got == want
+    assert len(set(got.values())) > 2 and all(0 <= v < 1 << 60 for v in got.values())
 
 
 def test_lsh_candidates_subset_of_pairs(spark, docs):
