@@ -514,11 +514,11 @@ def _q_minhash_lsh(spark, sf):
 
 
 def _q_simhash(spark, sf):
-    """Full SimHash near-dup pipeline (fingerprint → 16-bit bands →
-    pairs → Hamming by bit_count(xor))."""
+    """Full SimHash near-dup pipeline (60-bit fingerprint → four 15-bit
+    bands → pairs → Hamming by bit_count(xor))."""
     from pdf_context_extractor_agent_spark.functions.dedup import simhash, simhash_near_dups
 
-    return simhash_near_dups(simhash(_t(spark, sf, "documents")))
+    return simhash_near_dups(simhash(_t(spark, sf, "documents")), 60)
 
 
 def _q_embed_topk(spark, sf):
@@ -2767,7 +2767,9 @@ def _q_crawl_plan(spark, sf):
     freshness → due recrawls, candidate∪due → robots verdicts →
     politeness-scheduled frontier. Candidates ride the 7 robots hosts
     with priorities; recrawl entries live on the same hosts at /p/N
-    (priority null → sorts after prioritized under DESC NULLS LAST)."""
+    (priority null → sorts after prioritized under DESC NULLS LAST).
+    Every 5th doc's /p/N entry is also a candidate, so due URLs that
+    are already candidates exercise the anti-join."""
     from pdf_context_extractor_agent_spark.plans.crawl import crawl_plan
 
     d = F.col("doc_id")
@@ -2792,8 +2794,10 @@ def _q_crawl_plan(spark, sf):
          + F.expr("make_interval(0,0,0,0,cast(doc_id % 13 as int),0,0)"))
         .alias("last_fetch_ts"),
     )
-    candidates = _frontier_urls(spark, sf).select(
-        "url", (d % 13).cast("int").alias("priority")
+    candidates = (
+        _frontier_urls(spark, sf)
+        .unionByName(docs.filter(d % 5 == 0).select("doc_id", loc.alias("url")))
+        .select("url", (d % 13).cast("int").alias("priority"))
     )
     plan = crawl_plan(
         candidates,
@@ -5839,6 +5843,9 @@ delays AS (
         + rf""",
 cand AS (
   SELECT url, (doc_id % 13)::INT AS priority FROM urls
+  UNION ALL
+  SELECT 'https://h' || (doc_id % 7)::VARCHAR || '.example.com/p/' || doc_id::VARCHAR,
+         (doc_id % 13)::INT FROM documents WHERE doc_id % 5 = 0
 ),
 sm_e AS (
   SELECT 'https://h' || (doc_id % 7)::VARCHAR || '.example.com/p/'
@@ -5864,7 +5871,8 @@ due AS (
   WHERE c.last_fetch_ts IS NULL
      OR (e.lastmod_ts IS NOT NULL AND e.lastmod_ts > c.last_fetch_ts)
 ),
-allu AS (SELECT * FROM cand UNION ALL SELECT * FROM due),
+allu AS (SELECT * FROM cand UNION ALL
+         SELECT * FROM due WHERE url NOT IN (SELECT url FROM cand)),
 keyed AS (
   SELECT url, priority,
          regexp_replace(lower(regexp_extract(url, '^[a-zA-Z]+://([^/?#:]*)', 1)),
@@ -6835,7 +6843,7 @@ GROUP BY sym""",
             sums AS (SELECT doc_id, {sim_sums} FROM words GROUP BY doc_id),
             fps AS (SELECT doc_id, {sim_fp} AS fp FROM sums),
             banded AS (
-              SELECT doc_id, fp, band_idx, (fp >> (band_idx * 16)) & 65535 AS band_val
+              SELECT doc_id, fp, band_idx, (fp >> (band_idx * 15)) & 32767 AS band_val
               FROM fps CROSS JOIN (VALUES (0),(1),(2),(3)) b(band_idx))
             SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
                    bit_count(xor(l.fp, r.fp))::INT AS hamming

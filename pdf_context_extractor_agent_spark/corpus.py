@@ -816,7 +816,3 @@ def pages_df(spark: SparkSession, n_docs: int, partitions: int | None = None) ->
         spark.range(0, n_docs, numPartitions=partitions)
         .mapInPandas(gen, schema=PAGES_SCHEMA)
     )
-
-
-def write_corpus(spark: SparkSession, n_docs: int, path: str) -> None:
-    pages_df(spark, n_docs).write.mode("overwrite").parquet(path)

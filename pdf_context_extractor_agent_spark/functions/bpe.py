@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import iterate
+
 
 def _norm_words(text: Column) -> Column:
     return F.split(
@@ -92,9 +94,11 @@ def learn_bpe(
     merges. Each round reads one aggregated row on the driver — the
     parameter being learned — never corpus data.
     """
-    vocab = bpe_vocab(docs, text_col)
     merges: list[dict] = []
-    for step in range(1, n_merges + 1):
+
+    def step(vocab: DataFrame, i: int) -> DataFrame | None:
+        # this collect is the round's first action: it materialises the
+        # cut iterate() put on ``vocab``, so the replace chain runs once
         best = (
             _pair_counts(vocab)
             .orderBy(F.desc("pair_count"), "left", "right")
@@ -102,18 +106,10 @@ def learn_bpe(
             .collect()
         )
         if not best:
-            break
+            return None
         b = best[0]
-        merges.append(
-            {
-                "step": step,
-                "left": b["left"],
-                "right": b["right"],
-                "merged": b["left"] + b["right"],
-                "pair_count": b["pair_count"],
-            }
-        )
-        vocab = vocab.withColumn(
+        merges.append(dict(b.asDict(), step=i + 1, merged=b["left"] + b["right"]))
+        return vocab.withColumn(
             "enc",
             F.replace(
                 F.col("enc"),
@@ -121,10 +117,8 @@ def learn_bpe(
                 F.lit(f"|{b['left']}{b['right']}|"),
             ),
         )
-        if step % 8 == 0:
-            # k replaces nest linearly in the plan; cut lineage on
-            # long schedules the way connected_components does
-            vocab = vocab.localCheckpoint(eager=False)
+
+    vocab = iterate(bpe_vocab(docs, text_col), step, n_merges)
     return merges, vocab
 
 

@@ -28,6 +28,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .iterate import iterate
 from .sketch import md5_hash60
 
 
@@ -305,19 +306,21 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     return sums.select("doc_id", fp.alias("simhash64"))
 
 
-def simhash_near_dups(fps: DataFrame, band_bits: int = 16) -> DataFrame:
-    """Candidate pairs sharing any 16-bit band of the fingerprint, with
-    exact Hamming distance via bit_count(xor)."""
-    bands = []
-    for b in range(64 // band_bits):
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.shiftrightunsigned(F.col("simhash64"), b * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .alias("band_val"),
-            )
+def simhash_near_dups(fps: DataFrame, bits: int) -> DataFrame:
+    """Candidate pairs sharing any of four ``bits // 4``-bit bands of a
+    ``bits``-wide fingerprint, with exact Hamming distance via
+    bit_count(xor). The bands tile the fingerprint, so by pigeonhole
+    every pair within Hamming distance 3 shares a clean band."""
+    width = bits // 4
+    bands = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.shiftrightunsigned(F.col("simhash64"), b * width)
+            .bitwiseAND(F.lit((1 << width) - 1))
+            .alias("band_val"),
         )
+        for b in range(4)
+    ]
     banded = fps.select(
         "doc_id", "simhash64", F.explode(F.array(*bands)).alias("band")
     ).select("doc_id", "simhash64", "band.band_idx", "band.band_val")
@@ -432,13 +435,13 @@ def connected_components(
     * High-degree hubs (one boilerplate page near-dup with millions)
       are exactly what large-star flattens first, so dup-cluster skew
       self-heals instead of serializing into one task.
-    * ``localCheckpoint`` truncates the iterative lineage each round;
-      on a real cluster swap in ``spark.sparkContext.setCheckpointDir``
-      + ``.checkpoint()`` for executor-loss resilience.
+    * The rounds run under :func:`iterate`, which cuts the edge
+      relation's lineage between rounds.
 
     The per-round convergence probe is one tiny ``agg`` action
-    (count + hash-sum fingerprint) — the only driver-side data is two
-    scalars per round.
+    (count + hash-sum fingerprint) over the relation the round is
+    handed; it materialises iterate()'s lazy cut, so each round's
+    relation is evaluated once. A repeated fingerprint stops the loop.
     """
     e = (
         # ids pass through UNCAST: every step (min/least/greatest/window
@@ -453,7 +456,19 @@ def connected_components(
     )
     # invariant maintained throughout: u > v (child above parent-candidate)
     prev = None
-    for _ in range(max_iter):
+
+    def step(e: DataFrame, i: int) -> DataFrame | None:
+        nonlocal prev
+        if i:  # round 0's input is the uncut source; a probe would run it twice
+            cur = e.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(
+                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
+                ).alias("h"),
+            ).first()
+            if cur == prev:
+                return None
+            prev = cur
         # large-star: around each center, point every STRICTLY LARGER
         # neighbor at min(neighborhood ∪ {center})
         bid = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -467,23 +482,14 @@ def connected_components(
         # small-star: edges oriented u > v already; point every smaller
         # neighbor AND the center at min(neighborhood)
         sm = ls.select("u", "v", F.min("v").over(Window.partitionBy("u")).alias("m"))
-        e = (
+        return (
             sm.filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(sm.select("u", F.col("m").alias("v")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        fp = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).first()
-        cur = (fp["n"], str(fp["h"]))
-        if cur == prev:
-            break
-        prev = cur
+
+    e = iterate(e, step, max_iter)
     # fixpoint is a star forest: e = (child, root); roots label themselves
     children = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node"), F.col("v").alias("component"))

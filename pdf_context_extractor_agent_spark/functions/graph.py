@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import iterate
+
 RANK_SCALE = 10**12
 HITS_SCALE = 10**6
 
@@ -134,8 +136,7 @@ def page_rank(
     # The edge relation and outdeg are re-read every iteration, and the
     # rank state fans out twice per round (contrib + dangling mass): an
     # uncut lineage re-derives the caller's edge pipeline O(2^n_iter)
-    # times.  Checkpoint both inputs once and the state every round so
-    # each relation is computed exactly once per job.
+    # times.  Checkpoint both inputs once; iterate() cuts the state.
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=False)
@@ -144,10 +145,8 @@ def page_rank(
         F.count(F.lit(1)).alias("outdeg")
     ).localCheckpoint(eager=False)
     base = (100 - damping_pct) * RANK_SCALE // n_nodes // 100
-    rank = nodes.withColumn(
-        "rank", F.lit(RANK_SCALE // n_nodes).cast("long")
-    )
-    for it in range(n_iter):
+
+    def step(rank: DataFrame, _: int) -> DataFrame:
         r = rank.join(outdeg, rank["node"] == outdeg["src"], "left").select(
             "node", "rank", F.coalesce("outdeg", F.lit(0)).alias("outdeg")
         )
@@ -161,7 +160,7 @@ def page_rank(
         dang = r.filter(F.col("outdeg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0)).alias("dang")
         )
-        rank = (
+        return (
             nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
             .select("node", F.coalesce("contrib", F.lit(0)).alias("contrib"))
             .crossJoin(F.broadcast(dang))
@@ -173,13 +172,11 @@ def page_rank(
                 ).alias("rank"),
             )
         )
-        if it + 1 < n_iter:
-            # the final iteration's result is consumed exactly once by
-            # the caller's action, so its checkpoint would only add a
-            # driver-side plan compile; every EARLIER round must cut
-            # (the state fans out twice per following round)
-            rank = rank.localCheckpoint(eager=False)
-    return rank
+
+    rank = nodes.withColumn(
+        "rank", F.lit(RANK_SCALE // n_nodes).cast("long")
+    )
+    return iterate(rank, step, n_iter)
 
 
 def hits(
@@ -221,41 +218,42 @@ def hits(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=False)
     nodes = spark.range(n_nodes).select(F.col("id").alias("node"))
-    hub = nodes.withColumn("hub", F.lit(HITS_SCALE).cast("long"))
-    auth = None
-    for it in range(n_iter):
+
+    def normalized(raw: DataFrame, key: str, out: str) -> DataFrame:
+        tot = raw.agg(F.coalesce(F.sum("raw"), F.lit(1)).alias("tot"))
+        return (
+            nodes.join(raw, nodes["node"] == raw[key], "left")
+            .select("node", F.coalesce("raw", F.lit(0)).alias("raw"))
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "node",
+                F.expr(f"CAST(raw * {HITS_SCALE} DIV tot AS LONG)").alias(out),
+            )
+        )
+
+    def step(state: tuple[DataFrame, DataFrame], _: int):
+        _, hub = state
         araw = (
             hub.join(e, hub["node"] == e["src"])
             .groupBy("dst")
             .agg(F.sum("hub").alias("raw"))
         )
-        atot = araw.agg(F.coalesce(F.sum("raw"), F.lit(1)).alias("tot"))
-        auth = (
-            nodes.join(araw, nodes["node"] == araw["dst"], "left")
-            .select("node", F.coalesce("raw", F.lit(0)).alias("raw"))
-            .crossJoin(F.broadcast(atot))
-            .select(
-                "node",
-                F.expr(f"CAST(raw * {HITS_SCALE} DIV tot AS LONG)").alias("auth"),
-            )
-        )
+        auth = normalized(araw, "dst", "auth")
         hraw = (
             auth.join(e, auth["node"] == e["dst"])
             .groupBy("src")
             .agg(F.sum("auth").alias("raw"))
         )
-        htot = hraw.agg(F.coalesce(F.sum("raw"), F.lit(1)).alias("tot"))
-        hub = (
-            nodes.join(hraw, nodes["node"] == hraw["src"], "left")
-            .select("node", F.coalesce("raw", F.lit(0)).alias("raw"))
-            .crossJoin(F.broadcast(htot))
-            .select(
-                "node",
-                F.expr(f"CAST(raw * {HITS_SCALE} DIV tot AS LONG)").alias("hub"),
-            )
-        )
-        auth = auth.localCheckpoint(eager=False)
-        hub = hub.localCheckpoint(eager=False)
+        return auth, normalized(hraw, "src", "hub")
+
+    auth, hub = iterate(
+        (
+            nodes.withColumn("auth", F.lit(HITS_SCALE).cast("long")),
+            nodes.withColumn("hub", F.lit(HITS_SCALE).cast("long")),
+        ),
+        step,
+        n_iter,
+    )
     return auth.join(hub, "node").select("node", "auth", "hub")
 
 
@@ -292,12 +290,12 @@ def label_propagation(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if undirected:
         e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # lab fans out twice per round (vote join + coalesce join) — cut
-    # the lineage every round, and pin the per-round edge relation.
+    # lab fans out twice per round (vote join + coalesce join) — pin
+    # the per-round edge relation; iterate() cuts the label state.
     e = e.localCheckpoint(eager=False)
     nodes = spark.range(n_nodes).select(F.col("id").alias("node"))
-    lab = nodes.withColumn("label", F.col("node"))
-    for it in range(n_iter):
+
+    def step(lab: DataFrame, _: int) -> DataFrame:
         votes = (
             e.join(lab, e["dst"] == lab["node"])
             .select(e["src"].alias("node"), "label")
@@ -307,13 +305,13 @@ def label_propagation(
         best = votes.groupBy("node").agg(
             F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("label"))).alias("b")
         )
-        lab = (
+        return (
             lab.join(best.select("node", F.col("b.label").alias("new_label")),
                      "node", "left")
             .select("node", F.coalesce("new_label", "label").alias("label"))
         )
-        lab = lab.localCheckpoint(eager=False)
-    return lab
+
+    return iterate(nodes.withColumn("label", F.col("node")), step, n_iter)
 
 
 def _hb_estimate(s: DataFrame, m: int, wbits: int, out: str) -> DataFrame:
@@ -383,8 +381,9 @@ def hyperball(
     wbits = 60 - p
     spark = edges.sparkSession
     # s fans out twice per hop (contrib join + union) and also feeds
-    # each hop's estimate — checkpoint the register state per hop and
-    # pin the edge relation, or lineage growth is exponential in t.
+    # each hop's estimate — pin the edge relation; iterate() cuts the
+    # register state and the estimate table per hop, or lineage growth
+    # is exponential in t.
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).localCheckpoint(eager=False)
@@ -395,8 +394,9 @@ def hyperball(
         F.lit(wbits + 1) - F.length(F.conv(w, 10, 2))
     )
     s = nodes.select("node", (h % m).alias("bucket"), rho.alias("rho"))
-    out = _hb_estimate(s, m, wbits, "n0")
-    for t in range(1, t_max + 1):
+
+    def step(state: tuple[DataFrame, DataFrame], i: int):
+        s, out = state
         contrib = e.join(s, e["dst"] == s["node"]).select(
             e["src"].alias("node"), "bucket", "rho"
         )
@@ -404,9 +404,10 @@ def hyperball(
             s.unionByName(contrib)
             .groupBy("node", "bucket")
             .agg(F.max("rho").alias("rho"))
-            .localCheckpoint(eager=False)
         )
-        out = out.join(_hb_estimate(s, m, wbits, f"n{t}"), "node")
+        return s, out.join(_hb_estimate(s, m, wbits, f"n{i + 1}"), "node")
+
+    _, out = iterate((s, _hb_estimate(s, m, wbits, "n0")), step, t_max)
     harmonic = F.lit(0.0)
     for t in range(1, t_max + 1):
         harmonic = harmonic + (F.col(f"n{t}") - F.col(f"n{t - 1}")) / float(t)

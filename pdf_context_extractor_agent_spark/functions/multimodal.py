@@ -37,20 +37,6 @@ try:  # pragma: no cover - not present in this container
 except Exception:
     _HAS_PIL = False
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),       # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),     # opaque bytes
-        T.StructField("meta", T.StructType([
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("frames", T.IntegerType()),
-            T.StructField("mime", T.StringType()),
-        ])),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -313,7 +299,7 @@ def image_near_dups(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
         F.col("media_id").alias("doc_id"), F.col("ahash64").alias("simhash64")
     )
     return (
-        simhash_near_dups(fps)
+        simhash_near_dups(fps, 64)
         .filter(F.col("hamming") <= max_hamming)
         .select(
             F.col("doc_a").alias("media_a"),

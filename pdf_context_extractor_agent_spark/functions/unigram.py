@@ -33,14 +33,16 @@ Plan shapes:
   ``dp[j]`` for every word from ``dp[j-k]`` × a piece lookup
   (``k ≤ max_len``), one max-struct groupBy per round. The DP relation
   is the DISTINCT-WORD dimension — segmentation never touches the
-  corpus; callers join the result back by word. Deep lineage is capped
-  with a localCheckpoint every 4 rounds.
+  corpus; callers join the result back by word. The rounds run under
+  :func:`iterate`, which cuts the frontier's lineage between rounds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .iterate import iterate
 
 DEFAULT_MAX_LEN = 4
 DEFAULT_MAX_WORD = 10
@@ -122,8 +124,9 @@ def viterbi_segment(
         F.lit(0).cast("long").alias("mask"),
         F.lit("").alias("path"),
     )
-    frontier = dp
-    for j in range(1, max_word + 1):
+
+    def step(frontier: DataFrame, i: int) -> DataFrame:
+        j = i + 1
         # extend any frontier state at pos in [j-max_len, j-1] to pos j
         cand = (
             frontier.filter(
@@ -159,9 +162,9 @@ def viterbi_segment(
                 F.col("b.path").alias("path"),
             )
         )
-        frontier = frontier.unionByName(best_j)
-        if j % 4 == 0:
-            frontier = frontier.localCheckpoint(eager=False)
+        return frontier.unionByName(best_j)
+
+    frontier = iterate(dp, step, max_word)
     done = frontier.filter(F.col("pos") == F.length("word"))
     return done.select(
         "word",

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .iterate import iterate
+
 # C4's terminal-punctuation set, plus the CJK full-width equivalents the
 # corpus actually contains (the reference's documents are zh financial
 # reports).
@@ -885,12 +887,13 @@ def pagination_chains(links: DataFrame, rounds: int = 5) -> DataFrame:
     state = nodes.join(prev, "node", "left").select(
         "node", "ptr", F.when(F.col("ptr").isNull(), 0).otherwise(1).alias("d")
     )
-    for _ in range(rounds):
+
+    def step(state: DataFrame, _: int) -> DataFrame:
         t = state.select(
             F.col("node").alias("_tn"), F.col("ptr").alias("_tp"),
             F.col("d").alias("_td"),
         )
-        state = (
+        return (
             state.join(t, state["ptr"] == t["_tn"], "left")
             .select(
                 "node",
@@ -900,6 +903,10 @@ def pagination_chains(links: DataFrame, rounds: int = 5) -> DataFrame:
                 .otherwise(F.col("d")).alias("d"),
             )
         )
+
+    # the state self-joins every round: uncut, round r's plan holds
+    # 2^r copies of the first round
+    state = iterate(state, step, rounds)
     t = state.select(F.col("node").alias("_tn"), F.col("ptr").alias("_tp"))
     return (
         state.join(t, state["ptr"] == t["_tn"], "left")

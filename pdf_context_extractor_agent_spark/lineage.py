@@ -28,11 +28,6 @@ from pyspark.sql import functions as F
 
 from .kernels.html_layout import extract_pages
 
-METRICS_SCHEMA = (
-    "run_id string, partition_id int, url_count long, bytes long, "
-    "duration_ms long, status string, error string"
-)
-
 
 def instrumented_extract_pages(pages_tbl: DataFrame) -> DataFrame:
     """Kernel page rows plus the partition each document was parsed in,

@@ -26,11 +26,6 @@ from pyspark.sql import functions as F
 from ..functions import to_num
 from ..patterns import DEDUCTION_KEYWORDS, ESSENTIAL_ITEMS, TOLERANCE
 
-_CHECK_SCHEMA = (
-    "check_level int, check_name string, severity string, applicable boolean, "
-    "calculated double, reported double, difference double, tolerance double, passed boolean"
-)
-
 
 def _is_deduction(name: Column) -> Column:
     out = F.lit(False)

@@ -413,37 +413,6 @@ def item_pid_ranges() -> dict[str, tuple[int, int]]:
     return out
 
 
-def _anchor_rows() -> list[tuple]:
-    rows = []
-    for stmt, spec in _ANCHOR_SPEC.items():
-        for anchor_ord, (name, required, pats) in enumerate(spec):
-            for pat_ord, pat in enumerate(pats):
-                rows.append((len(rows), stmt, name, anchor_ord, required, pat, pat_ord))
-    return rows
-
-
-def anchor_df(spark: SparkSession) -> DataFrame:
-    """SI1 anchor bank as a broadcastable DataFrame."""
-    return spark.createDataFrame(
-        _anchor_rows(),
-        "aid int, statement_type string, anchor_name string, anchor_ord int, "
-        "required boolean, pattern string, pat_ord int",
-    )
-
-
-def anchor_pattern_list() -> list[tuple[int, str]]:
-    return [(r[0], r[5]) for r in _anchor_rows()]
-
-
-def end_pattern_rows() -> list[tuple[int, str, str]]:
-    """(eid, statement_type, pattern) for SI4 end-of-data detection."""
-    rows = []
-    for stmt, pats in STATEMENT_END_PATTERNS.items():
-        for pat in pats:
-            rows.append((len(rows), stmt, pat))
-    return rows
-
-
 def anchor_counts(statement_type: str) -> tuple[int, int]:
     """(total anchors, required anchors) for SI2 confidence."""
     spec = _ANCHOR_SPEC[statement_type]

@@ -241,49 +241,88 @@ def test_host_graph_dense_ids_and_rank(spark):
 
 
 def test_iterative_lineage_is_checkpointed(spark):
-    """Every iterative graph op must cut its lineage each round: the
-    state fans out 2× per iteration (e.g. PageRank's contrib + dangling
-    mass both read `rank`), so an uncut plan re-derives the caller's
-    edge pipeline O(2^n_iter) times — the r4 q_host_rank scale-killer
-    (20.9 s for a 23-host graph).  The final optimized plan must be
-    anchored on checkpointed RDD scans, with ZERO residual scans of the
-    original source or of the host-graph Deduplicate prologue."""
+    """Every iterative operator must cut its state's lineage between
+    rounds: the state fans out (PageRank's contrib + dangling mass both
+    read `rank`; pointer doubling self-joins), so an uncut plan
+    re-derives every earlier round O(2^rounds) times — the r4
+    q_host_rank scale-killer (20.9 s for a 23-host graph).
+
+    Each case tags the relation the initial state is built from with a
+    marker that survives optimisation — a filter on a unique literal,
+    or the node universe's ``Range`` for the graph ops, whose edges are
+    pinned before the loop — and counts its copies in the optimized
+    plan of the result. With a cut between rounds only the last round's
+    own reads remain, at 2 rounds as at 3; a missing cut leaves the
+    initial state in the plan, and the count grows with the rounds."""
+    from pdf_context_extractor_agent_spark.functions.bpe import learn_bpe
+    from pdf_context_extractor_agent_spark.functions.dedup import (
+        connected_components,
+    )
     from pdf_context_extractor_agent_spark.functions.graph import (
         hits,
         host_rank,
         hyperball,
         label_propagation,
-        page_rank,
+    )
+    from pdf_context_extractor_agent_spark.functions.unigram import (
+        piece_counts,
+        viterbi_segment,
+    )
+    from pdf_context_extractor_agent_spark.functions.webtext import (
+        pagination_chains,
     )
 
-    edges = spark.createDataFrame(
+    mark = 424242  # the unique literal
+
+    def copies(df, marker):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(marker)
+
+    pages = spark.createDataFrame(
         [
             ("https://a.com/1", "https://b.com/x"),
             ("https://b.com/1", "https://c.com/"),
             ("https://c.com/1", "https://a.com/"),
         ],
         "url string, out_url string",
+    ).filter(F.col("url") != f"https://{mark}/")
+    # host_graph's distinct + dense-id prologue runs once, behind its
+    # two cuts: the page source is never rescanned by the rank loop
+    assert copies(host_rank(pages), str(mark)) == 0
+
+    ids = _edges(spark, [(0, 1), (1, 2), (2, 0), (3, 4)])
+    universe = "Range (0, 5,"
+    text = "low lower lowest newer wider new low low"
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(text.split(" "))], "doc_id long, text string"
+    ).filter(F.col("doc_id") != mark)
+    pieces = piece_counts(spark.createDataFrame([(text,)], "text string"))
+    words = docs.select(F.col("text").alias("word"))
+    links = spark.createDataFrame(
+        [(f"u{i}", f"u{i + 1}") for i in range(9)], "url string, next_url string"
+    ).filter(F.col("url") != f"u{mark}")
+    pairs = _edges(spark, [(i, i + 1) for i in range(9)]).filter(
+        F.col("src") != mark
     )
-
-    def optimized(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    plan = optimized(host_rank(edges))
-    # the distinct + two-phase dense-id prologue must appear ZERO times
-    # in the final plan (it ran once, behind the checkpoints)
-    assert "Deduplicate" not in plan
-    assert plan.count("LocalRelation") == 0  # source never rescanned
-
-    ids = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src long, dst long")
-    src = ids.distinct()  # a marker node we can count in the plan
-    for op in (
-        lambda: page_rank(src, 3, n_iter=3),
-        lambda: hits(src, 3, n_iter=2),
-        lambda: label_propagation(src, 3, n_iter=2),
-        lambda: hyperball(src, 3, t_max=2),
-    ):
-        p = optimized(op())
-        # uncut lineage would replicate the Deduplicate marker once per
-        # downstream reference (≥2 for any of these); checkpointing per
-        # round leaves at most the single pre-checkpoint occurrence
-        assert p.count("Deduplicate") == 0, p[:500]
+    cases = {
+        # (result after r rounds, marker, copies left by the last round)
+        "page_rank": (lambda r: page_rank(ids, 5, n_iter=r), universe, 1),
+        "hits": (lambda r: hits(ids, 5, n_iter=r), universe, 4),
+        "label_propagation": (
+            lambda r: label_propagation(ids, 5, n_iter=r), universe, 0),
+        "hyperball": (lambda r: hyperball(ids, 5, t_max=r), universe, 0),
+        "connected_components": (
+            lambda r: connected_components(pairs, "src", "dst", max_iter=r),
+            str(mark), 0),
+        "learn_bpe": (lambda r: learn_bpe(docs, n_merges=r)[1], str(mark), 0),
+        "viterbi_segment": (  # max_word rounds: 5 and 6
+            lambda r: viterbi_segment(words, pieces, max_word=r + 3),
+            str(mark), 0),
+        "pagination_chains": (
+            lambda r: pagination_chains(links, rounds=r), str(mark), 0),
+    }
+    uncut = {}
+    for name, (run, marker, left) in cases.items():
+        got = [copies(run(r), marker) for r in (2, 3)]
+        if max(got) > left:
+            uncut[name] = got
+    assert not uncut

@@ -124,10 +124,45 @@ def test_simhash_near_dups(spark, docs):
     fps = simhash(docs)
     vals = {r.doc_id: r.simhash64 for r in fps.collect()}
     assert vals[0] == vals[1]
-    pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_near_dups(fps).collect()}
+    pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_near_dups(fps, 60).collect()}
     assert pairs.get((0, 1)) == 0
     near = pairs.get((0, 2))
     assert near is not None and near <= 16
+
+
+def test_simhash_bands_find_every_pair_within_hamming_3(spark):
+    """The four bands tile the 60-bit fingerprint (15 bits each), so by
+    pigeonhole the banded join finds every pair an all-pairs scan finds
+    within Hamming 3 — including pairs that differ only in bits 45-59,
+    the top band — and no band is a short one that bits 60-63 (always
+    0) pad out."""
+    import random
+
+    rnd = random.Random(7)
+    fps = []
+    for base in range(30):
+        fp = rnd.getrandbits(60)
+        fps.append(fp)
+        for k in (1, 2, 3):
+            bits = rnd.sample(range(60), k)
+            fps.append(fp ^ sum(1 << b for b in bits))
+        top = rnd.sample(range(45, 60), 3)
+        fps.append(fp ^ sum(1 << b for b in top))
+    # one differing bit in each 15-bit band: Hamming 4, identical in
+    # bits 48-59 — a candidate only under a short 12-bit top band
+    far = fps[0] ^ (1 << 0) ^ (1 << 15) ^ (1 << 30) ^ (1 << 45)
+    fps.append(far)
+    rows = list(enumerate(fps))
+    df = spark.createDataFrame(rows, "doc_id long, simhash64 long")
+    got = {(r.doc_a, r.doc_b): r.hamming for r in simhash_near_dups(df, 60).collect()}
+    want = {
+        (i, j): bin(a ^ b).count("1")
+        for i, a in rows for j, b in rows
+        if i < j and bin(a ^ b).count("1") <= 3
+    }
+    assert len(want) >= 120
+    assert {p: h for p, h in got.items() if h <= 3} == want
+    assert (0, len(fps) - 1) not in got
 
 
 def test_brute_force_topk(spark):
