@@ -303,9 +303,10 @@ def _q_window_running(spark, sf):
 
 
 def _q_m3_clean(spark, sf):
+    from pdf_context_extractor_agent_spark.functions.dedup import normalized_text
+
     docs = _t(spark, sf, "documents")
-    norm = F.lower(F.regexp_replace(F.trim("text"), r"\s+", " "))
-    return docs.select("doc_id", norm.alias("norm"))
+    return docs.select("doc_id", normalized_text(F.col("text")).alias("norm"))
 
 
 def _q_dedup_exact(spark, sf):
@@ -939,9 +940,10 @@ def _synth_lines(spark, sf):
     """Deterministic line table from documents: 6-word chunks with a
     hash-chosen terminal mark — gives the C4 rules real punctuation and
     word-count variety to act on (the raw corpus text has neither)."""
+    from pdf_context_extractor_agent_spark.functions.dedup import normalized_words
+
     docs = _t(spark, sf, "documents")
-    norm = F.lower(F.regexp_replace(F.trim("text"), r"\s+", " "))
-    w = F.split(norm, " ")
+    w = normalized_words(F.col("text"))
     n_lines = F.ceil(F.size(w) / F.lit(6)).cast("int")
     bodies = F.transform(
         F.sequence(F.lit(0), n_lines - 1),
@@ -1839,9 +1841,10 @@ def _gopher_text(spark, sf) -> DataFrame:
     8-word lines, 3-line paragraphs, plus doc_id-keyed tails that
     exercise the stop-word / bullet / ellipsis / symbol rules. Mirrored
     verbatim in the DuckDB oracles."""
+    from pdf_context_extractor_agent_spark.functions.dedup import normalized_words
+
     docs = _t(spark, sf, "documents")
-    norm = F.lower(F.regexp_replace(F.trim("text"), r"\s+", " "))
-    staged = docs.select("doc_id", F.split(norm, " ").alias("_w"))
+    staged = docs.select("doc_id", normalized_words(F.col("text")).alias("_w"))
     w = F.col("_w")
     n_chunks = F.greatest(F.ceil(F.size(w) / F.lit(8.0)).cast("int"), F.lit(1))
     staged = staged.withColumn(

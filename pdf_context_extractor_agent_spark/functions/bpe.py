@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import normalized_words
 from .iterate import iterate
-
-
-def _norm_words(text: Column) -> Column:
-    return F.split(
-        F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")), " "
-    )
 
 
 def encode_word(word: Column) -> Column:
@@ -45,7 +40,7 @@ def encode_word(word: Column) -> Column:
 def bpe_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """``(word, cnt, enc)`` vocabulary with occurrence counts — the one
     corpus-wide shuffle of BPE training."""
-    w = docs.select(F.explode(_norm_words(F.col(text_col))).alias("word"))
+    w = docs.select(F.explode(normalized_words(F.col(text_col))).alias("word"))
     return (
         w.filter(F.col("word") != "")
         .groupBy("word")

@@ -20,9 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _norm_terms(text: Column) -> Column:
-    return F.split(F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")), " ")
+from .dedup import normalized_words
 
 
 def hashed_term_weight(term: Column) -> Column:
@@ -45,7 +43,7 @@ def vocabulary_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
     dimension-sized, never corpus-sized."""
     return (
         docs.select(
-            F.explode(F.array_distinct(_norm_terms(F.col(text_col)))).alias("term")
+            F.explode(F.array_distinct(normalized_words(F.col(text_col)))).alias("term")
         )
         .distinct()
         .withColumn("weight", hashed_term_weight(F.col("term")))
@@ -72,7 +70,7 @@ def apply_linear_model(
     """
     terms = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_norm_terms(F.col(text_col))).alias("term"),
+        F.explode(normalized_words(F.col(text_col))).alias("term"),
     )
     scored = terms.join(F.broadcast(model), "term", "left")
     return (

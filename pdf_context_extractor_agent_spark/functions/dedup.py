@@ -36,6 +36,11 @@ def normalized_text(text: Column) -> Column:
     return F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
 
 
+def normalized_words(text: Column) -> Column:
+    """``normalized_text`` split on its single spaces."""
+    return F.split(normalized_text(text), " ")
+
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -65,7 +70,7 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 def shingle_array(text: Column, n: int = 3) -> Column:
     """Word n-gram shingles of one text, in order: a sliding window
     expressed with `sequence` + `slice` (fewer than n words → one)."""
-    words = F.split(normalized_text(text), " ")
+    words = normalized_words(text)
     idx = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
     return F.transform(idx, lambda i: F.array_join(F.slice(words, i, n), " "))
 
@@ -290,7 +295,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     """
     words = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalized_text(F.col(text_col)), " ")).alias("word"),
+        F.explode(normalized_words(F.col(text_col))).alias("word"),
     ).select("doc_id", md5_hash60(F.col("word"), 0).alias("wh"))
     aggs = [
         F.sum(
@@ -367,7 +372,7 @@ def ngram_jaccard_pairs(
 def doc_chunks(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                chunk_words: int = 2) -> DataFrame:
     """(doc_id, pos, chunk) — non-overlapping ``chunk_words``-word units."""
-    w = F.split(normalized_text(F.col(text_col)), " ")
+    w = normalized_words(F.col(text_col))
     n_chunks = F.ceil(F.size(w) / F.lit(chunk_words)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -542,7 +547,7 @@ def dedup_clusters(
 
 def _window_occurrences(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(doc_id, pos, h): md5 of every overlapping k-token window."""
-    toks = F.split(normalized_text(F.col(text_col)), " ")
+    toks = normalized_words(F.col(text_col))
     df = docs.select(
         F.col(id_col).cast("long").alias("doc_id"), toks.alias("w")
     ).filter(F.size("w") >= k)
@@ -612,7 +617,7 @@ def remove_duplicate_spans(
     sp = spans.groupBy("doc_id").agg(
         F.sort_array(F.collect_list(F.struct("span_start", "span_end"))).alias("_spans")
     )
-    toks = F.split(normalized_text(F.col(text_col)), " ")
+    toks = normalized_words(F.col(text_col))
     out = (
         docs.select(F.col(id_col).cast("long").alias("doc_id"), toks.alias("w"))
         .join(sp, "doc_id", "left")

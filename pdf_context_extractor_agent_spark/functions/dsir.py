@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .classify import _norm_terms
+from .dedup import normalized_words
 
 DEFAULT_BUCKETS = 256
 
@@ -50,7 +50,7 @@ def hashed_bucket(term: Column, num_buckets: int = DEFAULT_BUCKETS) -> Column:
 
 
 def _bucket_counts(docs: DataFrame, text_col: str, num_buckets: int) -> DataFrame:
-    terms = docs.select(F.explode(_norm_terms(F.col(text_col))).alias("term"))
+    terms = docs.select(F.explode(normalized_words(F.col(text_col))).alias("term"))
     return terms.select(hashed_bucket(F.col("term"), num_buckets).alias("bucket")).groupBy(
         "bucket"
     ).agg(F.count(F.lit(1)).alias("cnt"))
@@ -114,7 +114,7 @@ def dsir_score(
     """
     terms = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_norm_terms(F.col(text_col))).alias("term"),
+        F.explode(normalized_words(F.col(text_col))).alias("term"),
     ).select("doc_id", hashed_bucket(F.col("term"), num_buckets).alias("bucket"))
     return (
         terms.join(F.broadcast(log_ratios), "bucket")

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import normalized_text, normalized_words
+
 # marker-word banks for the n-gram language heuristic (tiny, broadcast
 # as literals inside the expression; counts are whole-word regex hits)
 LANG_MARKERS: dict[str, list[str]] = {
@@ -138,7 +140,7 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Content fingerprint: md5 over whitespace-normalized lowercase
     text (the exact-dedup key), plus a 64-bit prefix for compact joins."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
+    norm = normalized_text(F.col(text_col))
     fp = F.md5(norm)
     return docs.withColumn("fp_md5", fp).withColumn(
         "fp64", F.conv(F.substring(fp, 1, 16), 16, 10).cast("decimal(20,0)")
@@ -150,10 +152,6 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # expressions, NO shuffle: the correct 100 TB shape for per-document
 # quality filtering is a narrow map, not an explode+groupBy.
 # ---------------------------------------------------------------------------
-
-def _words(text: Column) -> Column:
-    return F.split(F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")), " ")
-
 
 def repetition_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document repetition signals:
@@ -180,7 +178,7 @@ def repetition_features(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     because it is non-cheap and multiply-referenced.
     """
     ws = docs.select(
-        F.col(id_col).alias("doc_id"), _words(F.col(text_col)).alias("_w")
+        F.col(id_col).alias("doc_id"), normalized_words(F.col(text_col)).alias("_w")
     )
     w = F.col("_w")
     bgs = ws.withColumn(
@@ -446,7 +444,7 @@ def gopher_repetition(
     t = F.col(text_col)
     base = docs.select(
         F.col(id_col).alias("doc_id"),
-        _words(t).alias("_w"),
+        normalized_words(t).alias("_w"),
         _split_lines(t).alias("_lines"),
         _split_paras(t).alias("_paras"),
     )
@@ -499,7 +497,7 @@ def gopher_gate(
     t = F.col(text_col)
     base = docs.select(
         F.col(id_col).alias("doc_id"),
-        _words(t).alias("_w"),
+        normalized_words(t).alias("_w"),
         _split_lines(t).alias("_lines"),
         t.alias("_t"),
     )
@@ -608,7 +606,7 @@ def corpus_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     t = F.col(text_col)
     ws_tokens = F.size(F.split(F.trim(t), r"\s+"))
-    fp = F.md5(F.lower(F.regexp_replace(F.trim(t), r"\s+", " ")))
+    fp = F.md5(normalized_text(t))
     staged = docs.select(
         "source",
         "lang",

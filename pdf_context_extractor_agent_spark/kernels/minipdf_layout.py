@@ -39,13 +39,19 @@ real non-Identity CJK encodings require (its codespaceranges override
 ToUnicode's, their canonical home per §9.7.5.3).
 
 Simplifications vs full PDF (documented contract of the subset): one
-content stream per page in document order, literal strings UTF-8.
+content stream per page in document order, literal strings UTF-8, and
+the first definition of an object number wins. Objects are found by one
+left-to-right scan of the file (``_scan``), never through the xref, so
+incremental updates are not followed and an indirect ``/Length`` must
+point at a top-level object.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 import zlib
+from typing import NamedTuple
 
 from .pdfish_layout import assemble_pages
 
@@ -55,9 +61,6 @@ PAGE_W, PAGE_H = 612, 792
 # a gap at or below this (i.e. adjustment ≤ -KERN_SPACE) renders as an
 # inter-word space — the same heuristic pdfminer/pdfplumber apply
 KERN_SPACE = 180.0
-
-# object dict + stream body: the dict tells us the /Filter
-_STREAM_RE = re.compile(rb"<<((?:[^<>]|<<[^>]*>>)*?)>>\s*stream\r?\n(.*?)endstream", re.S)
 
 # content-stream token classes (group index = token kind, dispatched
 # via match.lastindex — cheaper than re-inspecting the lexeme)
@@ -299,32 +302,183 @@ def _tokenize_stream(
             "width": float(PAGE_W), "height": float(PAGE_H)}
 
 
+# ---------------------------------------------------------------------------
+# object table: one left-to-right pass per file finds every object header
+# and every stream; object, stream, page and font lookups all read it
+# ---------------------------------------------------------------------------
+
+_HEADER_RE = re.compile(rb"(?<![0-9])(\d+)\s+(\d+)\s+obj\b")
+# the pass's two events: an object header (groups 1-2), or a stream dict
+# (group 3, which tells us the /Filter) up to the end of its 'stream' line
+_SCAN_RE = re.compile(
+    _HEADER_RE.pattern + rb"|<<((?:[^<>]|<<[^>]*>>)*?)>>\s*stream\r?\n"
+)
+# direct /Length only: the (?![0-9]) stops backtracking from shaving
+# digits off an indirect reference ('/Length 80 0 R' must NOT parse as
+# 8), and the trailing lookahead rejects the indirect 'N g R' form
+# outright — indirect lengths resolve through _declared_length below
+_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?![0-9])(?!\s+\d+\s+R)")
+_LENGTH_REF_RE = re.compile(rb"/Length\s+(\d+)\s+\d+\s+R")
+_INT_OBJ_RE = re.compile(rb"\s*(\d+)")
+_OBJSTM_N_RE = re.compile(rb"/N\s+(\d+)")
+_OBJSTM_FIRST_RE = re.compile(rb"/First\s+(\d+)")
 _PAGE_OBJ_RE = re.compile(rb"/Type\s*/Page(?![a-zA-Z])")
+_ROTATE_RE = re.compile(rb"/Rotate\s+(-?\d+)")
 
 
-def _objstm_page_bodies(blob: bytes) -> list[bytes]:
-    """Page-object bodies packed in /ObjStm streams, in pack order
-    (the writer's page order; a full /Kids tree walk is unnecessary for
-    the single-tree subset this kernel handles)."""
-    return [
-        body
-        for body in _objstm_lookup_all(blob).values()
-        if _PAGE_OBJ_RE.search(body)
-    ]
+class ObjectTable(NamedTuple):
+    """One PDF's objects and streams in document order, as offsets.
+
+    ``heads``: one ``[num, gen, body start, body end, first stream]``
+    per ``N G obj`` header; the body ends at the next header or at the
+    payload of the object's first stream (index into ``streams``, -1
+    when it has none). ``first``: object number → index of its first
+    gen-0 header. ``streams``: ``(owning header or -1, dict start, dict
+    end, payload start, payload end)``. ``objstm``: {objnum: body} of
+    the objects packed in /ObjStm streams."""
+
+    blob: bytes
+    heads: list[list[int]]
+    first: dict[int, int]
+    streams: list[tuple[int, int, int, int, int]]
+    objstm: dict[int, bytes]
 
 
-def _page_rotations(blob: bytes) -> list[int]:
-    """/Rotate values of the page objects in document order (reference
-    get_page_info rotation metadata, src/pdf_reader.py:102-136)."""
-    rotations = []
-    objs = [
-        blob[m.start(): blob.find(b"endobj", m.start())]
-        for m in _PAGE_OBJ_RE.finditer(blob)
-    ] or _objstm_page_bodies(blob)
-    for obj in objs:
-        r = re.search(rb"/Rotate\s+(-?\d+)", obj)
-        rotations.append(int(r.group(1)) if r else 0)
-    return rotations
+def _scan(blob: bytes) -> ObjectTable:
+    """The one pass. A stream's payload is ``/Length`` bytes when the
+    length is declared (binary Flate data may contain the literal
+    'endstream'), else it runs to the next 'endstream' (or to EOF). The
+    scan resumes after the payload's 'endstream' (or after the payload
+    when none follows), so payload bytes are never searched for
+    headers or streams — a spurious '<<...>>stream' or 'N 0 obj' inside
+    binary data is never recorded."""
+    heads: list[list[int]] = []
+    first: dict[int, int] = {}
+    streams: list[tuple[int, int, int, int, int]] = []
+    size = len(blob)
+    pos = 0
+    while (m := _SCAN_RE.search(blob, pos)) is not None:
+        pos = m.end()
+        if m.start(3) < 0:  # an object header
+            if heads:
+                heads[-1][3] = min(heads[-1][3], m.start())
+            num, gen = int(m.group(1)), int(m.group(2))
+            if gen == 0:
+                first.setdefault(num, len(heads))
+            heads.append([num, gen, pos, size, -1])
+            continue
+        n = _declared_length(blob, m.group(3), heads, first, pos)
+        if n is None:
+            end = blob.find(b"endstream", pos)
+            data_end = end if end >= 0 else size
+        else:
+            data_end = min(pos + n, size)
+            end = blob.find(b"endstream", data_end)
+        if heads:
+            head = heads[-1]
+            head[3] = min(head[3], pos)
+            if head[4] < 0:
+                head[4] = len(streams)
+        streams.append((len(heads) - 1, m.start(3), m.end(3), pos, data_end))
+        pos = end + len(b"endstream") if end >= 0 else data_end
+    return ObjectTable(blob, heads, first, streams, _objstm_index(blob, streams))
+
+
+def _declared_length(blob: bytes, obj_dict: bytes, heads: list[list[int]],
+                     first: dict[int, int], pos: int) -> int | None:
+    """A stream dict's /Length: the direct value, or the integer body of
+    an indirect '/Length N g R' object (Acrobat/Distiller writers
+    routinely indirect it, usually to an object right after the
+    stream, which the pass has not reached yet). None when absent."""
+    lm = _LENGTH_RE.search(obj_dict)
+    if lm is not None:
+        return int(lm.group(1))
+    rm = _LENGTH_REF_RE.search(obj_dict)
+    if rm is None:
+        return None
+    num = int(rm.group(1))
+    if num in first:
+        start = heads[first[num]][2]
+    else:
+        end = blob.find(b"endstream", pos)
+        start = next(
+            (h.end() for h in _HEADER_RE.finditer(blob, end if end >= 0 else pos)
+             if int(h.group(1)) == num and int(h.group(2)) == 0),
+            None,
+        )
+        if start is None:
+            return None
+    im = _INT_OBJ_RE.match(blob, start)
+    return int(im.group(1)) if im is not None else None
+
+
+def _objstm_index(
+    blob: bytes, streams: list[tuple[int, int, int, int, int]]
+) -> dict[int, bytes]:
+    """Object-stream (PDF 1.5 §7.5.7) index: {objnum: body bytes} for
+    every object packed inside a /Type /ObjStm stream — the layout
+    every modern real-world writer emits (dict-type objects compressed
+    together; content/CMap streams stay top-level by spec). The stream
+    body is ``num₁ off₁ num₂ off₂ …`` header pairs, then the object
+    bodies starting at /First, offsets relative to it. A malformed
+    header skips its stream."""
+    idx: dict[int, bytes] = {}
+    for _, ds, de, start, end in streams:
+        obj_dict = blob[ds:de]
+        if b"/ObjStm" not in obj_dict:
+            continue
+        nm, fm = _OBJSTM_N_RE.search(obj_dict), _OBJSTM_FIRST_RE.search(obj_dict)
+        if nm is None or fm is None:
+            continue
+        body = _decode_stream_bytes(obj_dict, blob[start:end])
+        n, first = int(nm.group(1)), int(fm.group(1))
+        toks = body[:first].split()
+        try:
+            pairs = [
+                (int(toks[2 * i]), int(toks[2 * i + 1]))
+                for i in range(min(n, len(toks) // 2))
+            ]
+        except ValueError:
+            continue
+        for i, (num, off) in enumerate(pairs):
+            stop = pairs[i + 1][1] if i + 1 < len(pairs) else len(body) - first
+            idx.setdefault(num, body[first + off: first + stop])
+    return idx
+
+
+def _body(tbl: ObjectTable, i: int) -> bytes:
+    """Bytes of header ``i``'s object up to its 'endobj' (or to where
+    its body ends when the 'endobj' is missing)."""
+    _, _, start, end, _ = tbl.heads[i]
+    e = tbl.blob.find(b"endobj", start, end)
+    return tbl.blob[start: e if e >= 0 else end]
+
+
+def _object_slice(tbl: ObjectTable, num: int) -> bytes | None:
+    """Body of object ``num``: its first top-level gen-0 definition,
+    else the ObjStm-packed one; None if absent."""
+    i = tbl.first.get(num)
+    return _body(tbl, i) if i is not None else tbl.objstm.get(num)
+
+
+def _object_stream(tbl: ObjectTable, num: int) -> tuple[bytes, bytes] | None:
+    """(dict bytes, payload bytes) of object ``num``'s stream; None when
+    the object is absent, packed in an ObjStm (packed objects carry no
+    stream, §7.5.7) or streamless."""
+    i = tbl.first.get(num)
+    if i is None or tbl.heads[i][4] < 0:
+        return None
+    _, ds, de, start, end = tbl.streams[tbl.heads[i][4]]
+    return tbl.blob[ds:de], tbl.blob[start:end]
+
+
+def _page_objects(tbl: ObjectTable) -> list[bytes]:
+    """The page walk: /Type /Page object bodies in document order. PDF
+    1.5 files pack them in /ObjStm streams instead, walked in pack
+    order (the writer's page order; a full /Kids tree walk is
+    unnecessary for the single-tree subset this kernel handles)."""
+    pages = [b for i in range(len(tbl.heads)) if _PAGE_OBJ_RE.search(b := _body(tbl, i))]
+    return pages or [b for b in tbl.objstm.values() if _PAGE_OBJ_RE.search(b)]
 
 
 # ---------------------------------------------------------------------------
@@ -375,7 +529,7 @@ _INTVAL_RE = {
 }
 
 
-def _encryption_key(blob: bytes) -> bytes | None:
+def _encryption_key(tbl: ObjectTable) -> bytes | None:
     """File encryption key for an empty user password, or None when the
     file is unencrypted. Raises NotImplementedError for handlers this
     subset does not cover (AES, non-Standard filters) and ValueError
@@ -386,16 +540,16 @@ def _encryption_key(blob: bytes) -> bytes | None:
     # would let an unencrypted document whose content stream merely
     # contains the text '/Encrypt N 0 R' trigger the decryption tier
     # and degrade to an empty page
+    blob = tbl.blob
     tp = blob.rfind(b"trailer")
     if tp < 0:
         return None  # xref-stream layouts in this subset are never encrypted
     em = _ENCRYPT_REF_RE.search(blob, tp)
     if em is None:
         return None
-    loc = _object_slice(blob, int(em.group(1)))
-    if loc is None:
+    ed = _object_slice(tbl, int(em.group(1)))
+    if ed is None:
         raise NotImplementedError("/Encrypt points at a missing object")
-    ed = loc[1]
     if b"/Standard" not in ed:
         raise NotImplementedError("non-Standard security handler")
     ints = {
@@ -413,10 +567,8 @@ def _encryption_key(blob: bytes) -> bytes | None:
     u_val = bytes.fromhex(um.group(1).decode())
     p = ints["P"] if ints["P"] is not None else -1
     n = (ints["Length"] or 40) // 8
-    idm = _ID_RE.search(blob)
+    idm = _ID_RE.search(blob, tp)
     id0 = bytes.fromhex(idm.group(1).decode()) if idm else b""
-    import hashlib
-
     h = hashlib.md5(
         _PW_PAD + o_val + (p & 0xFFFFFFFF).to_bytes(4, "little") + id0
     ).digest()
@@ -439,41 +591,30 @@ def _encryption_key(blob: bytes) -> bytes | None:
 
 
 def _object_key(key: bytes, num: int, gen: int = 0) -> bytes:
-    import hashlib
-
     return hashlib.md5(
         key + num.to_bytes(3, "little") + gen.to_bytes(2, "little")
     ).digest()[: min(len(key) + 5, 16)]
 
 
-_TOPOBJ_RE = re.compile(rb"(?<![0-9])(\d+)\s+(\d+)\s+obj\b")
-
-
-def decrypt_pdf(blob: bytes) -> bytes:
-    """qpdf-style whole-file decrypt: every top-level stream body is
-    RC4-decrypted in place with its per-object key. RC4 preserves
-    length, so offsets, /Length values and the xref stay valid and the
-    rest of the parser runs untouched. No-op for unencrypted files."""
-    key = _encryption_key(blob)
+def decrypt_pdf(tbl: ObjectTable) -> ObjectTable:
+    """qpdf-style whole-file decrypt: every stream payload inside an
+    object is RC4-decrypted in place, once, with its own object's key.
+    RC4 preserves length, so offsets, /Length values and the xref stay
+    valid; the plaintext file is scanned again and the rest of the
+    parser runs untouched. The table itself for unencrypted files."""
+    key = _encryption_key(tbl)
     if key is None:
-        return blob
+        return tbl
+    blob = tbl.blob
     out = bytearray(blob)
-    for m in _TOPOBJ_RE.finditer(blob):
-        num, gen = int(m.group(1)), int(m.group(2))
-        endobj = blob.find(b"endobj", m.end())
-        sm = _STREAM_RE.search(blob, m.end())
-        if sm is None or (0 <= endobj < sm.start()):
-            continue  # this object carries no stream
-        start = sm.start(2)
-        n = _stream_length(sm.group(1), blob)
-        ln = n if n is not None else len(sm.group(2))
-        out[start:start + ln] = _rc4(
-            _object_key(key, num, gen), blob[start:start + ln]
-        )
+    for owner, _, _, start, end in tbl.streams:
+        if owner >= 0:
+            num, gen = tbl.heads[owner][:2]
+            out[start:end] = _rc4(_object_key(key, num, gen), blob[start:end])
     # drop the /Encrypt reference IN THE TRAILER (decrypted content may
     # legitimately contain the same byte run): the bytes are plaintext now
     tp = blob.rfind(b"trailer")
-    return bytes(out[:tp]) + bytes(out[tp:]).replace(b"/Encrypt", b"/Decrypt", 1)
+    return _scan(bytes(out[:tp]) + bytes(out[tp:]).replace(b"/Encrypt", b"/Decrypt", 1))
 
 
 def _decode_stream_bytes(obj_dict: bytes, data: bytes) -> bytes:
@@ -491,33 +632,6 @@ def _decode_stream_bytes(obj_dict: bytes, data: bytes) -> bytes:
 
 def _decode_stream(obj_dict: bytes, data: bytes) -> str:
     return _decode_stream_bytes(obj_dict, data).decode("utf-8", errors="replace")
-
-
-# direct /Length only: the (?![0-9]) stops backtracking from shaving
-# digits off an indirect reference ('/Length 80 0 R' must NOT parse as
-# 8), and the trailing lookahead rejects the indirect 'N g R' form
-# outright — indirect lengths resolve through _stream_length below
-_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?![0-9])(?!\s+\d+\s+R)")
-_LENGTH_REF_RE = re.compile(rb"/Length\s+(\d+)\s+\d+\s+R")
-_INT_RE = re.compile(rb"(\d+)")
-
-
-def _stream_length(obj_dict: bytes, blob: bytes | None = None) -> int | None:
-    """Declared stream length: direct value, or — when ``blob`` is
-    given — an indirect '/Length N g R' reference resolved through the
-    object scan (Acrobat/Distiller writers routinely indirect it)."""
-    lm = _LENGTH_RE.search(obj_dict)
-    if lm is not None:
-        return int(lm.group(1))
-    if blob is not None:
-        rm = _LENGTH_REF_RE.search(obj_dict)
-        if rm is not None:
-            loc = _object_slice(blob, int(rm.group(1)))
-            if loc is not None:
-                im = _INT_RE.search(loc[1])
-                if im is not None:
-                    return int(im.group(1))
-    return None
 
 
 _CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+0\s+R")
@@ -658,162 +772,7 @@ def _parse_encoding_cmap(
     return code2cid, _parse_codespaces(text)
 
 
-_OBJSTM_N_RE = re.compile(rb"/N\s+(\d+)")
-_OBJSTM_FIRST_RE = re.compile(rb"/First\s+(\d+)")
-
-
-def _iter_streams(blob: bytes):
-    """Yield (obj_dict, raw stream bytes, end pos) for every stream in
-    document order, /Length authoritative — the same manual-resume scan
-    parse_minipdf's fallback path uses (a lazy regex alone stops at a
-    literal 'endstream' INSIDE binary Flate data)."""
-    pos = 0
-    while True:
-        m = _STREAM_RE.search(blob, pos)
-        if m is None:
-            return
-        obj_dict, data = m.group(1), m.group(2)
-        pos = m.end()
-        n = _stream_length(obj_dict, blob)
-        if n is not None:
-            data = blob[m.start(2): m.start(2) + n]
-            end = blob.find(b"endstream", m.start(2) + n)
-            pos = end + len(b"endstream") if end >= 0 else len(blob)
-        yield obj_dict, data, pos
-
-
-def _objstm_index(blob: bytes) -> dict[int, bytes]:
-    """Object-stream (PDF 1.5 §7.5.7) index: {objnum: body bytes} for
-    every object packed inside a /Type /ObjStm stream — the layout
-    every modern real-world writer emits (dict-type objects compressed
-    together; content/CMap streams stay top-level by spec). The stream
-    body is ``num₁ off₁ num₂ off₂ …`` header pairs, then the object
-    bodies starting at /First, offsets relative to it.
-
-    Cached per blob: object resolution is called per font/page and the
-    index costs one Flate pass (bytes hashes memoize in CPython, so the
-    lru key is cheap after the first call)."""
-    idx: dict[int, bytes] = {}
-    if b"/ObjStm" not in blob:
-        return idx
-    for obj_dict, data, _ in _iter_streams(blob):
-        if b"/ObjStm" not in obj_dict:
-            continue
-        nm, fm = _OBJSTM_N_RE.search(obj_dict), _OBJSTM_FIRST_RE.search(obj_dict)
-        if nm is None or fm is None:
-            continue
-        body = _decode_stream_bytes(obj_dict, data)
-        n, first = int(nm.group(1)), int(fm.group(1))
-        toks = body[:first].split()
-        pairs = [
-            (int(toks[2 * i]), int(toks[2 * i + 1]))
-            for i in range(min(n, len(toks) // 2))
-        ]
-        for i, (num, off) in enumerate(pairs):
-            end = pairs[i + 1][1] if i + 1 < len(pairs) else len(body) - first
-            idx[num] = body[first + off: first + end]
-    return idx
-
-
-# tiny per-blob memo for the ObjStm index: parse_minipdf resolves many
-# objects against the same blob sequentially, and tasks process docs
-# one at a time, so a 4-slot cache gives hit-rate ≈ 1 with no footprint
-_OBJSTM_CACHE: dict[int, tuple[bytes, dict[int, bytes]]] = {}
-
-
-def _objstm_lookup_all(blob: bytes) -> dict[int, bytes]:
-    slot = hash(blob) & 3
-    hit = _OBJSTM_CACHE.get(slot)
-    if hit is None or hit[0] is not blob:
-        hit = (blob, _objstm_index(blob))
-        _OBJSTM_CACHE[slot] = hit
-    return hit[1]
-
-
-def _objstm_lookup(blob: bytes, num: int) -> bytes | None:
-    return _objstm_lookup_all(blob).get(num)
-
-
-def _object_slice(blob: bytes, num: int) -> tuple[int, bytes] | None:
-    """(start offset, bytes) of ``num 0 obj … endobj``; None if absent.
-    The endobj bound is advisory only (stream bodies may contain the
-    literal) — callers that read streams re-bound via /Length. Objects
-    not at the top level resolve through the ObjStm index (offset -1:
-    packed objects have no top-level position)."""
-    m = re.search(rb"(?<![0-9])" + str(num).encode() + rb"\s+0\s+obj\b", blob)
-    if m is None:
-        body = _objstm_lookup(blob, num)
-        return (-1, body) if body is not None else None
-    end = blob.find(b"endobj", m.end())
-    return m.end(), blob[m.end(): end if end >= 0 else len(blob)]
-
-
-def _object_stream(blob: bytes, num: int) -> tuple[bytes, bytes] | None:
-    """(dict bytes, raw stream bytes) of object ``num``, /Length
-    authoritative when declared (binary data may contain 'endstream')."""
-    loc = _object_slice(blob, num)
-    if loc is None or loc[0] < 0:
-        # ObjStm-packed objects carry no stream by spec (§7.5.7)
-        return None
-    start, _ = loc
-    m = _STREAM_RE.search(blob, start)
-    if m is None:
-        return None
-    obj_dict, data = m.group(1), m.group(2)
-    n = _stream_length(obj_dict, blob)
-    if n is not None:
-        data = blob[m.start(2): m.start(2) + n]
-    return obj_dict, data
-
-
 _EMPTY_CMAP: CMapTable = ({}, _DEFAULT_CODESPACE, None)
-
-
-def _font_cmap(blob: bytes, font_num: int) -> CMapTable:
-    """Resolve a font object's CMap layers: /ToUnicode (CID → text) and,
-    when /Encoding is an embedded CMap STREAM rather than the
-    /Identity-H name, the code → CID layer too. Encoding-CMap
-    codespaceranges override ToUnicode's (§9.7.5.3 — that is their
-    canonical home). Empty table when neither is declared (simple
-    fonts, or Identity without a mapping)."""
-    loc = _object_slice(blob, font_num)
-    if loc is None:
-        return _EMPTY_CMAP
-    cid2uni, spaces, _ = _EMPTY_CMAP
-    tm = _TOUNICODE_RE.search(loc[1])
-    if tm is not None:
-        s = _object_stream(blob, int(tm.group(1)))
-        if s is not None:
-            cid2uni, spaces, _ = _parse_tounicode(_decode_stream(*s))
-    code2cid = None
-    em = _ENCODING_REF_RE.search(loc[1])
-    if em is not None:
-        s = _object_stream(blob, int(em.group(1)))
-        if s is not None:
-            code2cid, enc_spaces = _parse_encoding_cmap(_decode_stream(*s))
-            if enc_spaces:
-                spaces = enc_spaces
-    return cid2uni, spaces, code2cid
-
-
-def _page_font_cmaps(blob: bytes, page_obj: bytes,
-                     cache: dict[int, CMapTable]) -> dict[str, CMapTable]:
-    """Page /Resources /Font dict → {"/Fx": cmap table} for fonts that
-    carry a ToUnicode table, a non-default codespace, or an embedded
-    Encoding CMap (fonts with none stay absent → Identity path)."""
-    fm = _FONT_RES_RE.search(page_obj)
-    if fm is None:
-        return {}
-    out: dict[str, CMapTable] = {}
-    for name, fnum in _FONT_REF_RE.findall(fm.group(1)):
-        fnum = int(fnum)
-        if fnum not in cache:
-            cache[fnum] = _font_cmap(blob, fnum)
-        cid2uni, spaces, code2cid = cache[fnum]
-        if cid2uni or spaces != _DEFAULT_CODESPACE or code2cid is not None:
-            out["/" + name.decode("ascii")] = cache[fnum]
-    return out
-
 
 # glyph-width table of a SIMPLE (non-CID Type1/TrueType) embedded font:
 # (first_char, widths-per-code, missing_width).  Units are 1/1000 em,
@@ -823,7 +782,31 @@ def _page_font_cmaps(blob: bytes, page_obj: bytes,
 WidthTable = tuple[int, tuple[int, ...], int]
 
 
-def _font_widths(blob: bytes, font_num: int) -> WidthTable | None:
+def _font_cmap(tbl: ObjectTable, font: bytes) -> CMapTable:
+    """Resolve a font object's CMap layers: /ToUnicode (CID → text) and,
+    when /Encoding is an embedded CMap STREAM rather than the
+    /Identity-H name, the code → CID layer too. Encoding-CMap
+    codespaceranges override ToUnicode's (§9.7.5.3 — that is their
+    canonical home). Empty table when neither is declared (simple
+    fonts, or Identity without a mapping)."""
+    cid2uni, spaces, _ = _EMPTY_CMAP
+    tm = _TOUNICODE_RE.search(font)
+    if tm is not None:
+        s = _object_stream(tbl, int(tm.group(1)))
+        if s is not None:
+            cid2uni, spaces, _ = _parse_tounicode(_decode_stream(*s))
+    code2cid = None
+    em = _ENCODING_REF_RE.search(font)
+    if em is not None:
+        s = _object_stream(tbl, int(em.group(1)))
+        if s is not None:
+            code2cid, enc_spaces = _parse_encoding_cmap(_decode_stream(*s))
+            if enc_spaces:
+                spaces = enc_spaces
+    return cid2uni, spaces, code2cid
+
+
+def _font_widths(tbl: ObjectTable, font: bytes) -> WidthTable | None:
     """``/FirstChar``/``/Widths`` metrics of a simple font object, or
     None when the font declares neither (CID fonts carry /W instead;
     the built-in 14 carry nothing — both keep the no-advance path).
@@ -832,22 +815,19 @@ def _font_widths(blob: bytes, font_num: int) -> WidthTable | None:
     (reference dep: src/pdf_reader.py:17-29): successive show-runs with
     no intervening Tm/Td are positioned purely by these advances, so a
     kernel that ignores them mis-places every run after the first."""
-    loc = _object_slice(blob, font_num)
-    if loc is None:
-        return None
-    fm = _FIRSTCHAR_RE.search(loc[1])
+    fm = _FIRSTCHAR_RE.search(font)
     if fm is None:
         return None
-    wm = _WIDTHS_RE.search(loc[1])
+    wm = _WIDTHS_RE.search(font)
     if wm is None:
         # real writers frequently indirect the array: /Widths 12 0 R
-        rm = _WIDTHS_REF_RE.search(loc[1])
+        rm = _WIDTHS_REF_RE.search(font)
         if rm is None:
             return None
-        wloc = _object_slice(blob, int(rm.group(1)))
-        if wloc is None:
+        arr = _object_slice(tbl, int(rm.group(1)))
+        if arr is None:
             return None
-        wm = _WIDTHS_ARR_RE.search(wloc[1])
+        wm = _WIDTHS_ARR_RE.search(arr)
         if wm is None:
             return None
     try:
@@ -857,105 +837,80 @@ def _font_widths(blob: bytes, font_num: int) -> WidthTable | None:
     return int(fm.group(1)), widths, 0
 
 
-def _page_font_widths(blob: bytes, page_obj: bytes,
-                      cache: dict[int, WidthTable | None]) -> dict[str, WidthTable]:
-    """Page /Resources /Font dict → {"/Fx": width table} for simple
-    fonts that declare /FirstChar + /Widths."""
+def _page_fonts(
+    tbl: ObjectTable, page_obj: bytes,
+    cache: dict[int, tuple[CMapTable, WidthTable | None]],
+) -> tuple[dict[str, CMapTable], dict[str, WidthTable]]:
+    """Page /Resources /Font dict → ({"/Fx": cmap table}, {"/Fx": width
+    table}). A font enters the first map when it carries a ToUnicode
+    table, a non-default codespace or an embedded Encoding CMap (fonts
+    with none stay absent → Identity path), the second when it declares
+    /FirstChar + /Widths. ``cache`` resolves each font object once per
+    document."""
+    cmaps: dict[str, CMapTable] = {}
+    widths: dict[str, WidthTable] = {}
     fm = _FONT_RES_RE.search(page_obj)
     if fm is None:
-        return {}
-    out: dict[str, WidthTable] = {}
+        return cmaps, widths
     for name, fnum in _FONT_REF_RE.findall(fm.group(1)):
         fnum = int(fnum)
         if fnum not in cache:
-            cache[fnum] = _font_widths(blob, fnum)
-        wt = cache[fnum]
+            font = _object_slice(tbl, fnum)
+            cache[fnum] = (
+                (_EMPTY_CMAP, None) if font is None
+                else (_font_cmap(tbl, font), _font_widths(tbl, font))
+            )
+        cmap, wt = cache[fnum]
+        key = "/" + name.decode("ascii")
+        if cmap[0] or cmap[1] != _DEFAULT_CODESPACE or cmap[2] is not None:
+            cmaps[key] = cmap
         if wt is not None:
-            out["/" + name.decode("ascii")] = wt
-    return out
+            widths[key] = wt
+    return cmaps, widths
 
 
 def parse_minipdf(blob: bytes) -> list[dict]:
     """PDF bytes → per-page structs via the shared layout reconstruction.
 
-    Structured path: walk /Type /Page objects in document order and
-    resolve each page's /Contents stream by object reference — so
-    non-content streams (ToUnicode CMaps, XObjects) are never mistaken
-    for pages — threading the page's font CMaps into the tokenizer.
-    Blobs without a resolvable page tree (truncated or hand-rolled
-    fragments) fall back to scanning every stream as a page.
+    The object table is built once (twice for an encrypted file: the
+    raw bytes, then the plaintext). Structured path: walk /Type /Page
+    objects in document order and resolve each page's /Contents stream
+    by object reference — so non-content streams (ToUnicode CMaps,
+    XObjects) are never mistaken for pages — threading the page's font
+    CMaps and widths into the tokenizer. Blobs without a resolvable
+    page tree (truncated or hand-rolled fragments) fall back to
+    tokenizing every stream as a page.
     """
     # tier 0: strip standard-handler RC4 encryption (empty password) so
     # every later stage sees plaintext — offsets unchanged (RC4
     # preserves length), no other code path knows encryption exists
-    blob = decrypt_pdf(blob)
-    pages_raw = []
-    page_objs: list[tuple[int | None, bytes]] = []
-    for m in _PAGE_OBJ_RE.finditer(blob):
-        end = blob.find(b"endobj", m.start())
-        obj = blob[m.start(): end if end >= 0 else len(blob)]
-        cm = _CONTENTS_RE.search(obj)
-        page_objs.append((int(cm.group(1)) if cm else None, obj))
-    if not page_objs:
-        # PDF 1.5 layout: page dicts live inside /ObjStm object streams
-        # (the modern writers' default) — walk the unpacked index in
-        # stream order; content streams stay top-level by spec
-        for obj in _objstm_page_bodies(blob):
-            cm = _CONTENTS_RE.search(obj)
-            page_objs.append((int(cm.group(1)) if cm else None, obj))
-
-    structured = bool(page_objs) and all(c is not None for c, _ in page_objs)
-    if structured:
-        font_cache: dict[int, CMapTable] = {}
-        width_cache: dict[int, WidthTable | None] = {}
-        for contents_num, obj in page_objs:
-            s = _object_stream(blob, contents_num)
-            if s is None:
-                structured = False
-                pages_raw = []
-                break
-            cmaps = _page_font_cmaps(blob, obj, font_cache)
-            widths = _page_font_widths(blob, obj, width_cache)
-            pages_raw.append(
-                _tokenize_stream(
-                    _decode_stream(*s), cmaps or None, widths or None
-                )
-            )
-
-    if not structured:
-        pos = 0
-        while True:
-            # manual scan (not finditer): after a /Length override the true
-            # stream end can lie PAST the regex's lazy 'endstream' match, and
-            # a resumed finditer would re-enter the residual binary bytes —
-            # where a spurious '<<...>>stream' can emit a garbage page
-            m = _STREAM_RE.search(blob, pos)
-            if m is None:
-                break
-            obj_dict, data = m.group(1), m.group(2)
-            pos = m.end()
-            n = _stream_length(obj_dict, blob)
-            if n is not None:
-                # authoritative byte count: binary (Flate) data may contain
-                # the literal 'endstream', which the regex would stop at
-                data = blob[m.start(2): m.start(2) + n]
-                end = blob.find(b"endstream", m.start(2) + n)
-                pos = end + len(b"endstream") if end >= 0 else len(blob)
+    tbl = decrypt_pdf(_scan(blob))
+    page_objs = _page_objects(tbl)
+    contents = [_CONTENTS_RE.search(obj) for obj in page_objs]
+    streams = [cm and _object_stream(tbl, int(cm.group(1))) for cm in contents]
+    if page_objs and all(streams):
+        fonts: dict[int, tuple[CMapTable, WidthTable | None]] = {}
+        pages_raw = [
+            _tokenize_stream(_decode_stream(*s), *_page_fonts(tbl, obj, fonts))
+            for s, obj in zip(streams, page_objs)
+        ]
+    else:
+        pages_raw = []
+        for _, ds, de, start, end in tbl.streams:
+            obj_dict, data = tbl.blob[ds:de], tbl.blob[start:end]
             # non-content streams are never pages: ObjStm/XRef carry
             # packed objects or binary xref rows, CMap streams carry
             # /CIDInit procsets — tokenizing any of them emits garbage
-            if (
-                b"/ObjStm" in obj_dict
-                or b"/XRef" in obj_dict
-                or b"CIDInit" in data[:64]
-            ):
+            if b"/ObjStm" in obj_dict or b"/XRef" in obj_dict or b"CIDInit" in data[:64]:
                 continue
             pages_raw.append(_tokenize_stream(_decode_stream(obj_dict, data)))
 
-    rotations = _page_rotations(blob)
-    if len(rotations) == len(pages_raw):  # malformed trees default to 0
-        for p, r in zip(pages_raw, rotations):
-            p["rotation"] = r
+    # /Rotate of the page objects (reference get_page_info rotation
+    # metadata, src/pdf_reader.py:102-136); malformed trees default to 0
+    if len(page_objs) == len(pages_raw):
+        for p, obj in zip(pages_raw, page_objs):
+            r = _ROTATE_RE.search(obj)
+            p["rotation"] = int(r.group(1)) if r else 0
     return assemble_pages(pages_raw)
 
 
@@ -976,6 +931,19 @@ def cid_hex(s: str, cid_of: dict[str, int], nbytes_of: dict[str, int] | None = N
     return "<" + "".join(f"{cid_of[c]:0{2 * nbytes_of[c]}X}" for c in s) + ">"
 
 
+def _code_width(code: int, cs: list[tuple[int, int, int]]) -> int:
+    """Byte width of ``code`` in the codespace ranges ``cs`` (2 outside them)."""
+    for n, lo, hi in cs:
+        if lo <= code <= hi:
+            return n
+    return 2
+
+
+def _code_hex(code: int, cs: list[tuple[int, int, int]]) -> str:
+    """``code`` as hex at its codespace byte width (a CMap source code)."""
+    return f"{code:0{2 * _code_width(code, cs)}X}"
+
+
 def tounicode_cmap(
     cmap: dict[int, str],
     codespace: list[tuple[int, int, int]] | None = None,
@@ -992,16 +960,6 @@ def tounicode_cmap(
         return s.encode("utf-16-be").hex().upper()
 
     cs = codespace or [(2, 0x0000, 0xFFFF)]
-
-    def _w(code: int) -> int:
-        for n, lo, hi in cs:
-            if lo <= code <= hi:
-                return n
-        return 2
-
-    def _src(code: int) -> str:
-        return f"{code:0{2 * _w(code)}X}"
-
     ranges: list[tuple[int, int, str]] = []       # (lo, hi, dst_start)
     chars: list[tuple[int, str]] = []
     for cid in sorted(cmap):
@@ -1013,7 +971,8 @@ def tounicode_cmap(
             and len(dst) == 1
             and ord(dst) == ord(ranges[-1][2]) + (cid - ranges[-1][0])
             and (cid & 0xFF) != 0  # don't span the low-byte wrap
-            and _w(cid) == _w(ranges[-1][0])  # nor a codespace width change
+            # nor a codespace width change
+            and _code_width(cid, cs) == _code_width(ranges[-1][0], cs)
         ):
             lo, _, d0 = ranges[-1]
             ranges[-1] = (lo, cid, d0)
@@ -1041,13 +1000,13 @@ def tounicode_cmap(
         chunk = ranges[i:i + 100]
         parts.append(f"{len(chunk)} beginbfrange")
         for lo, hi, d0 in chunk:
-            parts.append(f"<{_src(lo)}> <{_src(hi)}> <{_hx(d0)}>")
+            parts.append(f"<{_code_hex(lo, cs)}> <{_code_hex(hi, cs)}> <{_hx(d0)}>")
         parts.append("endbfrange")
     for i in range(0, len(chars), 100):
         chunk = chars[i:i + 100]
         parts.append(f"{len(chunk)} beginbfchar")
         for cid, d in chunk:
-            parts.append(f"<{_src(cid)}> <{_hx(d)}>")
+            parts.append(f"<{_code_hex(cid, cs)}> <{_hx(d)}>")
         parts.append("endbfchar")
     parts += [
         "endcmap",
@@ -1068,16 +1027,6 @@ def encoding_cmap(
     so a generated document exercises both parser paths. Blocks capped
     at 100 entries (spec limit)."""
     cs = codespace or [(2, 0x0000, 0xFFFF)]
-
-    def _w(code: int) -> int:
-        for n, lo, hi in cs:
-            if lo <= code <= hi:
-                return n
-        return 2
-
-    def _src(code: int) -> str:
-        return f"{code:0{2 * _w(code)}X}"
-
     ranges: list[tuple[int, int, int]] = []      # (lo, hi, cid_start)
     chars: list[tuple[int, int]] = []
     for code in sorted(code2cid):
@@ -1087,7 +1036,7 @@ def encoding_cmap(
             and ranges[-1][1] == code - 1
             and cid == ranges[-1][2] + (code - ranges[-1][0])
             and (code & 0xFF) != 0  # don't span the low-byte wrap
-            and _w(code) == _w(ranges[-1][0])
+            and _code_width(code, cs) == _code_width(ranges[-1][0], cs)
         ):
             lo, _, c0 = ranges[-1]
             ranges[-1] = (lo, code, c0)
@@ -1112,13 +1061,13 @@ def encoding_cmap(
         chunk = ranges[i:i + 100]
         parts.append(f"{len(chunk)} begincidrange")
         for lo, hi, c0 in chunk:
-            parts.append(f"<{_src(lo)}> <{_src(hi)}> {c0}")
+            parts.append(f"<{_code_hex(lo, cs)}> <{_code_hex(hi, cs)}> {c0}")
         parts.append("endcidrange")
     for i in range(0, len(chars), 100):
         chunk = chars[i:i + 100]
         parts.append(f"{len(chunk)} begincidchar")
         for code, cid in chunk:
-            parts.append(f"<{_src(code)}> {cid}")
+            parts.append(f"<{_code_hex(code, cs)}> {cid}")
         parts.append("endcidchar")
     parts += [
         "endcmap",
@@ -1244,8 +1193,6 @@ def render_minipdf(
         # standard security handler, R2/V1 (40-bit RC4), empty user and
         # owner passwords, all permissions — the "restrict printing, not
         # reading" shape real encrypted annual reports use
-        import hashlib
-
         id0 = hashlib.md5(b"".join(objects)).digest()
         o_val = _rc4(hashlib.md5(_PW_PAD).digest()[:5], _PW_PAD)
         p = -1
@@ -1287,15 +1234,12 @@ def render_minipdf(
 
 
 def _encrypt_object_streams(obj: bytes, num: int, key: bytes) -> bytes:
-    """RC4-encrypt the stream body of one assembled object (writer-side
+    """RC4-encrypt the stream payload of one assembled object (writer-side
     twin of :func:`decrypt_pdf`'s per-object decrypt)."""
-    m = _STREAM_RE.search(obj)
-    if m is None:
-        return obj
-    start = m.start(2)
-    lm = _LENGTH_RE.search(m.group(1))
-    ln = int(lm.group(1)) if lm else len(m.group(2))
-    return obj[:start] + _rc4(_object_key(key, num), obj[start:start + ln]) + obj[start + ln:]
+    out = bytearray(obj)
+    for _, _, _, start, end in _scan(obj).streams:
+        out[start:end] = _rc4(_object_key(key, num), obj[start:end])
+    return bytes(out)
 
 
 def _assemble_objstm(objects: list[bytes]) -> bytes:

@@ -1,13 +1,14 @@
 """Sinks S6-S8: JSON / CSV / nested-document views of the parsed
-relation, plus the driver-side Excel presentation step.
+relation, plus the row walks of the Excel sheets.
 
 Reference: main.py:110-441 (`save_result` JSON :125-127, `_save_to_csv`
 :392-441, `_save_to_excel` :144-390). The engine's canonical output is
 the long-format ``parsed`` relation; the nested per-document JSON the
 reference emits is a pivoted VIEW of it (J5, balance_sheet.py:130-159),
 built here with ``collect_list``/``to_json`` — distributed, no driver
-loop. Excel is a presentation concern: a ``toPandas().to_excel`` helper
-guarded by an openpyxl import-try (absent in this container).
+loop. Excel is a presentation concern (SURVEY §2.1 S7): the engine
+builds the ordered sheet rows (``balance_excel_rows``) and leaves writing
+the ``.xlsx`` to the caller.
 """
 
 from __future__ import annotations
@@ -56,26 +57,9 @@ def write_parsed_json(parsed: DataFrame, path: str) -> None:
     nested_document_json(parsed).write.mode("overwrite").json(path)
 
 
-def to_excel(parsed: DataFrame, path: str) -> bool:
-    """S7 driver-side presentation (out of engine scope per SURVEY §2.1
-    S7): requires openpyxl; returns False when unavailable."""
-    try:
-        import openpyxl  # noqa: F401
-    except Exception:
-        return False
-    pdf = parsed.orderBy("url", "statement_type", "row_order").toPandas()
-    with __import__("pandas").ExcelWriter(path) as xl:  # pragma: no cover
-        for stmt, grp in pdf.groupby("statement_type"):
-            grp.to_excel(xl, sheet_name=stmt[:31], index=False)
-    return True
-
-
 # ---------------------------------------------------------------------------
 # S7: the reference's ordered-walk Excel sheet (main.py:144-390)
 # ---------------------------------------------------------------------------
-
-_XL_COLS = ["部分", "类别", "项目名称", "原始名称", "本期末金额", "上期末金额", "附注"]
-
 
 def _xl_row(section="", category="", item_name="", original_name="",
             current_period="", previous_period="", note=""):
@@ -134,41 +118,12 @@ def balance_excel_rows(items: list[dict]) -> list[dict]:
     return rows
 
 
-def to_excel_ordered(parsed: DataFrame, path: str, url: str) -> bool:
-    """S7 full parity for one document: Summary sheet + 资产负债表 sheet
-    built by the ordered walk, with the reference's column widths
-    (main.py:144-390). Requires openpyxl; returns False when absent."""
-    try:
-        import openpyxl  # noqa: F401
-    except Exception:
-        return False
-    import pandas as pd  # pragma: no cover (openpyxl absent in CI container)
-
-    items = [
-        r.asDict()
-        for r in parsed.filter(
-            (F.col("url") == url) & (F.col("statement_type") == "balance_sheet")
-        ).orderBy("row_order").collect()
-    ]
-    with pd.ExcelWriter(path, engine="openpyxl") as writer:  # pragma: no cover
-        pd.DataFrame({"url": [url], "success": [bool(items)]}).to_excel(
-            writer, sheet_name="Summary", index=False
-        )
-        pd.DataFrame(balance_excel_rows(items), columns=_XL_COLS).to_excel(
-            writer, sheet_name="资产负债表", index=False
-        )
-        ws = writer.sheets["资产负债表"]
-        for col, width in zip("ABCDEFG", (15, 15, 20, 20, 15, 15, 10)):
-            ws.column_dimensions[col].width = width
-    return True
-
-
 # ---------------------------------------------------------------------------
 # S7b: the reference's NOTES workbook (tools/export_notes_to_excel.py)
 # — TOC sheet + one content sheet per level-1 note. The walk is pure
 # Python over collected note dicts so the workbook structure is golden-
 # testable without openpyxl; the actual .xlsx write is a guarded
-# presentation step like `to_excel_ordered`.
+# presentation step.
 # ---------------------------------------------------------------------------
 
 import re as _re

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..corpus import PAGES_SCHEMA
+from ..functions.dedup import normalized_text
 from ..functions.quality import quality_features
 from ..kernels import extract_pages
 
@@ -259,7 +260,7 @@ def streaming_exact_dedup(pages_stream: DataFrame) -> DataFrame:
     unique no matter how documents straddle micro-batches.
     """
     hashed = pages_stream.select(
-        F.md5(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " "))).alias("content_hash"),
+        F.md5(normalized_text(F.col("text"))).alias("content_hash"),
         "url",
     )
     return hashed.groupBy("content_hash").applyInPandasWithState(

@@ -32,13 +32,13 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from pdf_context_extractor_agent_spark.functions.dedup import lsh_eval, normalized_text
+    from pdf_context_extractor_agent_spark.functions.dedup import lsh_eval, normalized_words
     from pdf_context_extractor_agent_spark.session import get_spark
 
     spark = get_spark(cores=args.cores)
     base = spark.read.parquet(args.input).select("doc_id", "text")
     k = F.col("doc_id") % 10 + 3
-    words = F.split(normalized_text(F.col("text")), " ")
+    words = normalized_words(F.col("text"))
     twins = base.select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.array_join(

@@ -151,14 +151,45 @@ def test_pdfish_random_roundtrip_fuzz():
 
 
 def test_malformed_documents_degrade_not_throw():
-    """Corrupt crawl records must yield an empty page, never raise —
-    a kernel exception would fail the task and (after retries) the job."""
-    from pdf_context_extractor_agent_spark.kernels import parse_doc
+    """Corrupt crawl records must yield pages, never raise — a kernel
+    exception would fail the task and (after retries) the job. The
+    %PDF- inputs: seeded prefix cuts of one corpus doc per minipdf slice
+    (CID 4, widths 14, ObjStm 24, encrypted 44, broken xref 54), a
+    /Length running past EOF, a stream without 'endstream', an object
+    without 'endobj', and a trailer /Encrypt naming a missing object."""
+    import random
 
-    for blob in (b"", b"\x00\xff\xfe garbage", b"<html><td>unclosed",
-                 b"FPDF1\nP x y\nT not numbers here\n", b"\x80\x81\x82"):
+    from pdf_context_extractor_agent_spark.kernels import parse_doc
+    from pdf_context_extractor_agent_spark.kernels.minipdf_layout import (
+        parse_minipdf,
+        render_minipdf,
+    )
+
+    blobs = [b"", b"\x00\xff\xfe garbage", b"<html><td>unclosed",
+             b"FPDF1\nP x y\nT not numbers here\n", b"\x80\x81\x82"]
+    rng = random.Random(7)
+    for i in (4, 14, 24, 44, 54):
+        doc = make_doc(i)[2]
+        blobs += [doc[:rng.randrange(len(doc))] for _ in range(8)]
+
+    stream = "BT /F1 10 Tf 1 0 0 1 100 700 Tm (still here) Tj ET"
+    plain = render_minipdf([stream])
+    structural = [
+        plain.replace(b"/Length %d " % len(stream), b"/Length 99999 ", 1),
+        plain.replace(b"\nendstream", b"", 1),
+        plain.replace(b"endobj\n4 0 obj", b"4 0 obj", 1),
+    ]
+    assert all(b != plain for b in structural)
+    for b in structural:  # the structure survives: the text is still found
+        assert parse_minipdf(b)[0]["page_text"] == "still here"
+    enc = render_minipdf([stream], encrypt=True)
+    missing = enc.replace(b"/Encrypt 6 0 R", b"/Encrypt 99 0 R", 1)
+    assert missing != enc
+    blobs += structural + [missing]
+
+    for blob in blobs:
         pages = parse_doc(blob)
-        assert isinstance(pages, list)
+        assert isinstance(pages, list) and len(pages) >= 1
         for p in pages:
             assert set(p) == {"page", "width", "height", "rotation", "page_text", "lines", "tables"}
 
@@ -1000,7 +1031,8 @@ def test_indirect_length_reference_decrypts_fully():
 
     from pdf_context_extractor_agent_spark.kernels.minipdf_layout import (
         _LENGTH_RE,
-        _stream_length,
+        _object_stream,
+        _scan,
         parse_minipdf,
         render_minipdf,
     )
@@ -1021,8 +1053,55 @@ def test_indirect_length_reference_decrypts_fully():
         b"/Length %d 0 R >>\nstream" % num, 1)
     p = blob2.find(b"xref\n")
     blob2 = blob2[:p] + b"%d 0 obj\n%s\nendobj\n" % (num, m.group(1)) + blob2[p:]
-    assert _stream_length(b"/Length %d 0 R" % num, blob2) == int(m.group(1))
+    # the length object comes after its stream: the scan looks ahead
+    # for it, and the payload is exactly the referenced byte count
+    payload = _object_stream(_scan(blob2), 4)[1]
+    assert len(payload) == int(m.group(1))
     assert parse_minipdf(blob2)[0]["page_text"] == "indirect length survives"
+
+
+def test_object_table_is_built_once_per_file(monkeypatch):
+    """parse_minipdf scans a file once; an encrypted one twice (the
+    ciphertext, then the plaintext the decrypt step produces)."""
+    from pdf_context_extractor_agent_spark.kernels import minipdf_layout as M
+
+    stream = "BT /F1 10 Tf 1 0 0 1 100 700 Tm (scanned once) Tj ET"
+    plain = M.render_minipdf([stream, stream], compress=True)
+    enc = M.render_minipdf([stream], encrypt=True)
+    calls = []
+    scan = M._scan
+    monkeypatch.setattr(M, "_scan", lambda blob: calls.append(len(blob)) or scan(blob))
+    assert M.parse_minipdf(plain)[0]["page_text"] == "scanned once"
+    assert len(calls) == 1
+    calls.clear()
+    assert M.parse_minipdf(enc)[0]["page_text"] == "scanned once"
+    assert len(calls) == 2
+
+
+def test_decrypt_rc4s_each_payload_once_with_its_own_key(monkeypatch):
+    """With 'endobj' missing from the object just before the content
+    stream's object, each stream payload is still decrypted exactly
+    once, with its owning object's key (the password check's RC4 of
+    the pad is not a payload decryption)."""
+    from pdf_context_extractor_agent_spark.kernels import minipdf_layout as M
+
+    stream = "BT /F1 10 Tf 1 0 0 1 100 700 Tm (one key per payload) Tj ET"
+    blob = M.render_minipdf([stream], encrypt=True)
+    broken = blob.replace(b"endobj\n4 0 obj", b"4 0 obj", 1)
+    assert broken != blob
+    payloads = []
+    rc4 = M._rc4
+
+    def counting_rc4(key, data):
+        if data is not M._PW_PAD:
+            payloads.append(key)
+        return rc4(key, data)
+
+    monkeypatch.setattr(M, "_rc4", counting_rc4)
+    for b in (blob, broken):
+        payloads.clear()
+        assert M.parse_minipdf(b)[0]["page_text"] == "one key per payload"
+        assert len(payloads) == 1  # one content stream, one RC4
 
 
 def test_encrypt_marker_in_content_does_not_trigger_decryption():
