@@ -229,6 +229,12 @@ def robots_check(
     the match predicate pushed into the join condition, then a
     per-URL window to pick the winning rule. The rules side is a
     dimension (per-host, not per-page): AQE broadcasts it when small.
+
+    Each input row gets a ``monotonically_increasing_id`` identity for
+    that window, derived from its partition and position: it is stable
+    across task retries only while the input's partitioning is
+    deterministic. Checkpoint or sort an input whose row order can
+    change between attempts.
     """
     from .urls import url_host
 
@@ -238,6 +244,7 @@ def robots_check(
         # partitions on the column VALUES, so two identical input rows
         # (a frontier with repeated candidates) would collapse to one
         # verdict — violating the keeps-every-input-row contract
+        # (stable while the input's partitioning is deterministic)
         .withColumn("__rid", F.monotonically_increasing_id())
         .withColumn("host", url_host(F.col(url_col)))
         .withColumn("path", _url_path(F.col(url_col)))

@@ -13,6 +13,11 @@ the real PDF operator vocabulary:
     (string) Tj             show text
     [(a) -250 (b)] TJ       show with kerning (gap ≤ KERN_SPACE → space)
     x y m   x y l   S       path moveto/lineto/stroke (ruling lines)
+    /Fx size Tf             select font (CMap + /Widths) and size
+
+An operator whose numeric operands are not numbers (a string or a name
+where a number belongs) is ignored: it leaves the interpreter state as
+it was, so a damaged stream loses that operator, not the document.
 
 Streams may be /FlateDecode-compressed (zlib, stdlib); uncompressed
 streams pass through untouched. The tokenizer walks each stream, tracks
@@ -73,6 +78,7 @@ _TOKEN_RE = re.compile(
     """,
     re.X,
 )
+_ESCAPE_RE = re.compile(r"\\(.)", re.S)
 
 
 def is_minipdf(blob: bytes) -> bool:
@@ -80,43 +86,56 @@ def is_minipdf(blob: bytes) -> bool:
 
 
 def _unescape(s: str) -> str:
-    out = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            out.append(s[i + 1])
-            i += 2
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
+    # a lone trailing backslash has no escaped character and stays
+    return _ESCAPE_RE.sub(r"\1", s)
+
+
+def _nums(stack: list[str], n: int) -> tuple[float, ...] | None:
+    """The last ``n`` operands as floats; None when fewer than ``n`` are
+    stacked or one of them is not a number (a string or a name)."""
+    try:
+        v = tuple(map(float, stack[-n:]))
+    except ValueError:
+        return None
+    return v if len(v) == n else None
+
+
+def _text_width(text: str, wt: WidthTable) -> int:
+    """Sum of ``text``'s glyph widths (1/1000 em) in a /Widths table."""
+    first, widths, missing = wt
+    n = len(widths)
+    total = 0
+    for ch in text:
+        i = ord(ch) - first
+        total += widths[i] if 0 <= i < n else missing
+    return total
 
 
 def _tokenize_stream(
-    data: str,
-    font_cmaps: dict[str, CMapTable] | None = None,
-    font_widths: dict[str, "WidthTable"] | None = None,
+    data: str, fonts: dict[str, FontEntry] | None = None
 ) -> dict:
     """One content stream → {runs, h, v} in layout (top-down) coords.
 
-    ``font_cmaps`` maps resource names ("/F2") to (ToUnicode CID→str
-    table, codespace ranges); ``Tf`` selects the active table, hex
-    show-strings decode through it (variable-byte codespace-driven
-    codes, code=codepoint fallback).
+    ``fonts`` maps resource names ("/F2") to (CMap table, /Widths
+    table); ``Tf`` selects the active entry. Hex show-strings decode
+    through its CMap table (variable-byte codespace-driven codes,
+    code=codepoint fallback when the font has none).
 
-    ``font_widths`` maps resource names to simple-font /Widths tables;
-    when the active font carries one, every show operator advances the
-    text position by the shown glyphs' widths × font size / 1000 (and
-    TJ kern adjustments subtract adj/1000 × size), so consecutive
-    shows with no intervening Tm/Td land where a metrics-aware
-    renderer puts them. Fonts without /Widths keep the no-advance
-    behavior (every show explicitly positioned).
+    When the active font carries a /Widths table, every show operator
+    advances the text position by the shown glyphs' widths × font
+    size / 1000 (and TJ kern adjustments subtract adj/1000 × size), so
+    consecutive shows with no intervening Tm/Td land where a
+    metrics-aware renderer puts them. Fonts without /Widths keep the
+    no-advance behavior (every show explicitly positioned).
+
+    Operands stay strings on the stack; each operator reads its numbers
+    through ``_nums`` and ignores itself when they are not numbers.
     """
+    fonts = fonts or {}
     runs: list[tuple[int, int, str]] = []
     h_segs: list[tuple[int, int, int, int]] = []
     v_segs: list[tuple[int, int, int, int]] = []
-    stack: list = []
+    stack: list[str] = []
     tx = ty = 0.0          # current show position (text matrix, PDF coords)
     lx = ly = 0.0          # current LINE start (text line matrix): Td, T*
     #                        and ' translate THIS matrix (§9.4.2) — show
@@ -127,8 +146,8 @@ def _tokenize_stream(
     cur_cmap: CMapTable | None = None
     cur_widths: WidthTable | None = None
     cur_size = 10.0        # Tf size operand (scales /Widths advances)
-    path_pt: tuple[float, float] | None = None
-    pending_seg: tuple[float, float, float, float] | None = None
+    path_pt: tuple[float, ...] | None = None
+    pending_seg: tuple[float, ...] | None = None
 
     def flip(y: float) -> int:
         return int(PAGE_H - y)
@@ -150,9 +169,7 @@ def _tokenize_stream(
         if len(hx) % 2:
             hx += "0"
         bs = bytes.fromhex(hx)
-        cmap, ranges, code2cid = (
-            cur_cmap if cur_cmap else ({}, _DEFAULT_CODESPACE, None)
-        )
+        cmap, ranges, code2cid = cur_cmap or _EMPTY_CMAP
         min_n = ranges[0][0]
         out = []
         i, L = 0, len(bs)
@@ -179,89 +196,58 @@ def _tokenize_stream(
     def advance(text: str) -> None:
         """Move tx past ``text`` by the active simple font's metrics."""
         nonlocal tx
-        if cur_widths is None:
-            return
-        first, widths, missing = cur_widths
-        n = len(widths)
-        total = 0
-        for ch in text:
-            i = ord(ch) - first
-            total += widths[i] if 0 <= i < n else missing
-        tx += total * cur_size / 1000.0
+        if cur_widths is not None:
+            tx += _text_width(text, cur_widths) * cur_size / 1000.0
 
     def show_top() -> None:
-        if stack and isinstance(stack[-1], str) and stack[-1][:1] in "(<":
+        if stack and stack[-1][0] in "(<":
             text = shown(stack[-1])
             runs.append((int(tx), flip(ty), text))
             advance(text)
 
     for m in _TOKEN_RE.finditer(data):
-        kind = m.lastindex
-        if kind == 3:  # number (the most frequent token)
-            stack.append(m.group(3))
-        elif kind == 1:  # literal string
-            stack.append(m.group(1))
-        elif kind == 2:  # hex string
-            stack.append(m.group(2))
-        elif kind == 4:  # name (kept verbatim: Tf reads it)
-            stack.append(m.group(4))
+        if m.lastindex != 5:  # an operand: number, string or name, verbatim
+            stack.append(m.group())
         else:
-            tok = m.group(5)
+            tok = m.group()
             if tok == "Tj":
                 show_top()
             elif tok == "Tf":
-                # /Fx size Tf — switch the active ToUnicode table and
-                # width metrics; remember the size for advance scaling
-                if len(stack) >= 2 and isinstance(stack[-2], str):
-                    if font_cmaps:
-                        cur_cmap = font_cmaps.get(stack[-2])
-                    if font_widths:
-                        cur_widths = font_widths.get(stack[-2])
-                    else:
-                        cur_widths = None
-                    try:
-                        cur_size = float(stack[-1])
-                    except (TypeError, ValueError):
-                        pass
+                # /Fx size Tf — switch the active CMap and width
+                # tables; remember the size for advance scaling
+                if (v := _nums(stack, 1)) is not None and len(stack) > 1:
+                    cur_cmap, cur_widths = fonts.get(stack[-2], (None, None))
+                    (cur_size,) = v
             elif tok == "TJ":
                 # [(a) -250 (b)] TJ — brackets are not tokens, so the
                 # stack holds the strings and kern numbers in order
                 parts: list[str] = []
                 adv = 0.0  # total advance in 1/1000-em units × size
                 for item in stack:
-                    if isinstance(item, str) and item[:1] in "(<":
+                    if item[0] in "(<":
                         s = shown(item)
                         parts.append(s)
                         if cur_widths is not None:
-                            first_c, widths_a, missing = cur_widths
-                            nw = len(widths_a)
-                            for ch in s:
-                                i2 = ord(ch) - first_c
-                                adv += widths_a[i2] if 0 <= i2 < nw else missing
-                    elif item is not None and not (
-                        isinstance(item, str) and item.startswith("/")
-                    ):
-                        try:
-                            k = float(item)
-                        except ValueError:
-                            continue
-                        if k <= -KERN_SPACE:
-                            parts.append(" ")
-                        # a TJ adjustment moves the glyph origin by
-                        # -adj/1000 × size regardless of whether it
-                        # rendered as a space (spec §9.4.3)
-                        adv -= k
+                            adv += _text_width(s, cur_widths)
+                        continue
+                    try:
+                        k = float(item)
+                    except ValueError:
+                        continue
+                    if k <= -KERN_SPACE:
+                        parts.append(" ")
+                    # a TJ adjustment moves the glyph origin by
+                    # -adj/1000 × size regardless of whether it
+                    # rendered as a space (spec §9.4.3)
+                    adv -= k
                 text = "".join(parts)
                 if text:
                     runs.append((int(tx), flip(ty), text))
                 if cur_widths is not None:
                     tx += adv * cur_size / 1000.0
             elif tok == "TL":
-                if stack:
-                    try:
-                        leading = float(stack[-1])
-                    except (TypeError, ValueError):
-                        pass
+                if (v := _nums(stack, 1)) is not None:
+                    (leading,) = v
             elif tok == "T*":
                 ly -= leading
                 tx, ty = lx, ly
@@ -270,23 +256,20 @@ def _tokenize_stream(
                 tx, ty = lx, ly
                 show_top()
             elif tok == "Tm":
-                if len(stack) >= 6:
-                    tx, ty = float(stack[-2]), float(stack[-1])
-                    lx, ly = tx, ty
+                if (v := _nums(stack, 6)) is not None:
+                    tx, ty = lx, ly = v[4], v[5]
             elif tok == "Td":
-                if len(stack) >= 2:
-                    lx += float(stack[-2])
-                    ly += float(stack[-1])
+                if (v := _nums(stack, 2)) is not None:
+                    lx += v[0]
+                    ly += v[1]
                     tx, ty = lx, ly
             elif tok == "m":
-                if len(stack) >= 2:
-                    path_pt = (float(stack[-2]), float(stack[-1]))
+                if (v := _nums(stack, 2)) is not None:
+                    path_pt = v
             elif tok == "l":
-                if len(stack) >= 2 and path_pt is not None:
-                    x1, y1 = path_pt
-                    x2, y2 = float(stack[-2]), float(stack[-1])
-                    pending_seg = (x1, y1, x2, y2)
-                    path_pt = (x2, y2)
+                if path_pt is not None and (v := _nums(stack, 2)) is not None:
+                    pending_seg = path_pt + v
+                    path_pt = v
             elif tok == "S":
                 if pending_seg is not None:
                     x1, y1, x2, y2 = pending_seg
@@ -670,6 +653,11 @@ CMapTable = tuple  # tuple[dict[int, str], tuple[...], tuple | None]
 Code2Cid = tuple  # tuple[dict[int, int], tuple[tuple[int, int, int], ...]]
 
 
+def _hex_int(hx: str) -> int:
+    """A CMap hex code (``<00 41>`` contents, spaces allowed) → int."""
+    return int("".join(hx.split()), 16)
+
+
 def _apply_code2cid(code: int, code2cid: Code2Cid | None) -> int:
     """Embedded-/Encoding CMap lookup: cidchar singles first, then
     cidrange offsets; unmapped codes pass through (Identity — the
@@ -704,13 +692,10 @@ def _parse_tounicode(text: str) -> CMapTable:
         except ValueError:
             return ""
 
-    def _code(hx: str) -> int:
-        return int("".join(hx.split()), 16)
-
     cmap: dict[int, str] = {}
     for block in _BFRANGE_RE.findall(text):
         for lo_h, hi_h, dst_h, arr_h in _BFRANGE_ITEM_RE.findall(block):
-            lo, hi = _code(lo_h), _code(hi_h)
+            lo, hi = _hex_int(lo_h), _hex_int(hi_h)
             if arr_h:
                 dsts = re.findall(r"<([0-9A-Fa-f\s]+)>", arr_h)
                 for i, d in enumerate(dsts[: hi - lo + 1]):
@@ -724,7 +709,7 @@ def _parse_tounicode(text: str) -> CMapTable:
                     cmap[c] = base[:-1] + chr(last + (c - lo))
     for block in _BFCHAR_RE.findall(text):
         for src, dst in _HEX_PAIR_RE.findall(block):
-            cmap[_code(src)] = _u(dst)
+            cmap[_hex_int(src)] = _u(dst)
     return cmap, _parse_codespaces(text) or _DEFAULT_CODESPACE, None
 
 
@@ -733,8 +718,7 @@ def _parse_codespaces(text: str) -> tuple[tuple[int, int, int], ...]:
     for block in _CODESPACE_RE.findall(text):
         for lo_h, hi_h in _HEX_PAIR_RE.findall(block):
             nbytes = max(1, len("".join(lo_h.split())) // 2)
-            ranges.append((nbytes, int("".join(lo_h.split()), 16),
-                           int("".join(hi_h.split()), 16)))
+            ranges.append((nbytes, _hex_int(lo_h), _hex_int(hi_h)))
     ranges.sort()
     return tuple(ranges)
 
@@ -757,17 +741,14 @@ def _parse_encoding_cmap(
     (cidrange offset runs + cidchar singles), and only then does
     /ToUnicode map CIDs to text. Codespaceranges canonically live HERE
     (§9.7.5.3) — when present they override the ToUnicode ones."""
-    def _code(hx: str) -> int:
-        return int("".join(hx.split()), 16)
-
     singles: dict[int, int] = {}
     ranges: list[tuple[int, int, int]] = []
     for block in _CIDRANGE_RE.findall(text):
         for lo_h, hi_h, cid0 in _CIDRANGE_ITEM_RE.findall(block):
-            ranges.append((_code(lo_h), _code(hi_h), int(cid0)))
+            ranges.append((_hex_int(lo_h), _hex_int(hi_h), int(cid0)))
     for block in _CIDCHAR_RE.findall(text):
         for src_h, cid in _CIDCHAR_ITEM_RE.findall(block):
-            singles[_code(src_h)] = int(cid)
+            singles[_hex_int(src_h)] = int(cid)
     code2cid = (singles, tuple(ranges)) if (singles or ranges) else None
     return code2cid, _parse_codespaces(text)
 
@@ -780,6 +761,10 @@ _EMPTY_CMAP: CMapTable = ({}, _DEFAULT_CODESPACE, None)
 # missing width (spec default 0 — /MissingWidth lives in the
 # FontDescriptor, outside this subset's contract).
 WidthTable = tuple[int, tuple[int, ...], int]
+
+# one page font as the interpreter sees it: (CMap table, /Widths table
+# or None); a name the page does not declare reads as (None, None)
+FontEntry = tuple[CMapTable | None, WidthTable | None]
 
 
 def _font_cmap(tbl: ObjectTable, font: bytes) -> CMapTable:
@@ -838,20 +823,16 @@ def _font_widths(tbl: ObjectTable, font: bytes) -> WidthTable | None:
 
 
 def _page_fonts(
-    tbl: ObjectTable, page_obj: bytes,
-    cache: dict[int, tuple[CMapTable, WidthTable | None]],
-) -> tuple[dict[str, CMapTable], dict[str, WidthTable]]:
-    """Page /Resources /Font dict → ({"/Fx": cmap table}, {"/Fx": width
-    table}). A font enters the first map when it carries a ToUnicode
-    table, a non-default codespace or an embedded Encoding CMap (fonts
-    with none stay absent → Identity path), the second when it declares
-    /FirstChar + /Widths. ``cache`` resolves each font object once per
+    tbl: ObjectTable, page_obj: bytes, cache: dict[int, FontEntry]
+) -> dict[str, FontEntry]:
+    """Page /Resources /Font dict → {"/Fx": (CMap table, /Widths table or
+    None)}. A font without ToUnicode or Encoding CMaps gets the empty
+    (Identity) table. ``cache`` resolves each font object once per
     document."""
-    cmaps: dict[str, CMapTable] = {}
-    widths: dict[str, WidthTable] = {}
     fm = _FONT_RES_RE.search(page_obj)
     if fm is None:
-        return cmaps, widths
+        return {}
+    fonts: dict[str, FontEntry] = {}
     for name, fnum in _FONT_REF_RE.findall(fm.group(1)):
         fnum = int(fnum)
         if fnum not in cache:
@@ -860,13 +841,8 @@ def _page_fonts(
                 (_EMPTY_CMAP, None) if font is None
                 else (_font_cmap(tbl, font), _font_widths(tbl, font))
             )
-        cmap, wt = cache[fnum]
-        key = "/" + name.decode("ascii")
-        if cmap[0] or cmap[1] != _DEFAULT_CODESPACE or cmap[2] is not None:
-            cmaps[key] = cmap
-        if wt is not None:
-            widths[key] = wt
-    return cmaps, widths
+        fonts["/" + name.decode("ascii")] = cache[fnum]
+    return fonts
 
 
 def parse_minipdf(blob: bytes) -> list[dict]:
@@ -889,9 +865,9 @@ def parse_minipdf(blob: bytes) -> list[dict]:
     contents = [_CONTENTS_RE.search(obj) for obj in page_objs]
     streams = [cm and _object_stream(tbl, int(cm.group(1))) for cm in contents]
     if page_objs and all(streams):
-        fonts: dict[int, tuple[CMapTable, WidthTable | None]] = {}
+        fonts: dict[int, FontEntry] = {}
         pages_raw = [
-            _tokenize_stream(_decode_stream(*s), *_page_fonts(tbl, obj, fonts))
+            _tokenize_stream(_decode_stream(*s), _page_fonts(tbl, obj, fonts))
             for s, obj in zip(streams, page_objs)
         ]
     else:

@@ -108,18 +108,18 @@ def streaming_extract_statements(
     complex batch logic on streams. Per-document extraction is
     batch-local by construction (no cross-document state), so
     micro-batch boundaries cannot change results. Exactly-once comes
-    from the streaming checkpoint: a replayed batch id rewrites the
-    same rows (tagged ``batch_id``), and downstream readers dedup on
-    (url, statement_type, row_order) if a retry raced a crash.
+    from the streaming checkpoint plus an idempotent sink: each batch
+    overwrites its own ``batch_id=N`` partition, so a batch replayed
+    after a crash (its commit not yet recorded) replaces the rows it
+    wrote instead of adding them again. Reading ``output_dir`` restores
+    the ``batch_id`` column by partition discovery.
 
     Returns the started StreamingQuery (caller awaits/stops)."""
     from ..plans import parse_statements
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         parsed = parse_statements(extract_pages(batch_df), spark, statements)["parsed"]
-        parsed.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            output_dir
-        )
+        parsed.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
 
     return (
         stream_pages(spark, input_dir)

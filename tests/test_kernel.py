@@ -872,16 +872,17 @@ def test_tokenizer_width_advance_semantics():
         _tokenize_stream,
     )
 
-    wt = {"/F3": (65, (500, 1000), 0)}  # A→500, B→1000
+    wt = (65, (500, 1000), 0)  # A→500, B→1000
     runs = _tokenize_stream(
-        "BT /F3 20 Tf 1 0 0 1 100 700 Tm (AB) Tj (A) Tj ET", font_widths=wt
+        "BT /F3 20 Tf 1 0 0 1 100 700 Tm (AB) Tj (A) Tj ET",
+        fonts={"/F3": (None, wt)},
     )["runs"]
     # AB advances (500+1000)/1000·20 = 30 → second run at 130
     assert [(r[0], r[2]) for r in runs] == [(100, "AB"), (130, "A")]
 
     runs = _tokenize_stream(
         "BT /F3 10 Tf 1 0 0 1 0 700 Tm [(A) -500 (B)] TJ (A) Tj ET",
-        font_widths=wt,
+        fonts={"/F3": (None, wt)},
     )["runs"]
     # TJ: 500 + kern 500 + 1000 = 2000 → /1000·10 = 20; kern ≥ KERN_SPACE
     # renders as a space inside the joined run
@@ -889,13 +890,15 @@ def test_tokenizer_width_advance_semantics():
 
     # glyph outside [first, first+len) → missing width 0 (no advance)
     runs = _tokenize_stream(
-        "BT /F3 10 Tf 1 0 0 1 0 700 Tm (z) Tj (A) Tj ET", font_widths=wt
+        "BT /F3 10 Tf 1 0 0 1 0 700 Tm (z) Tj (A) Tj ET",
+        fonts={"/F3": (None, wt)},
     )["runs"]
     assert [(r[0], r[2]) for r in runs] == [(0, "z"), (0, "A")]
 
     # a font with no width table never advances (legacy behavior)
     runs = _tokenize_stream(
-        "BT /F1 10 Tf 1 0 0 1 0 700 Tm (AB) Tj (C) Tj ET", font_widths=wt
+        "BT /F1 10 Tf 1 0 0 1 0 700 Tm (AB) Tj (C) Tj ET",
+        fonts={"/F3": (None, wt)},
     )["runs"]
     assert [(r[0], r[2]) for r in runs] == [(0, "AB"), (0, "C")]
 
@@ -1008,18 +1011,80 @@ def test_td_offsets_from_line_start_not_show_position():
         _tokenize_stream,
     )
 
-    wt = {"/F3": (65, (600, 600), 0)}
+    wt = (65, (600, 600), 0)
     runs = _tokenize_stream(
         "BT /F3 10 Tf 1 0 0 1 100 700 Tm (AB) Tj 0 -12 Td (AB) Tj ET",
-        font_widths=wt,
+        fonts={"/F3": (None, wt)},
     )["runs"]
     assert [(r[0], r[1]) for r in runs] == [(100, 92), (100, 104)]
     # T* and ' also reset to the line start
     runs = _tokenize_stream(
         "BT /F3 10 Tf 14 TL 1 0 0 1 50 700 Tm (AB) Tj T* (C) Tj 1 0 0 1 50 600 Tm (AB) Tj (D) ' ET",
-        font_widths=wt,
+        fonts={"/F3": (None, wt)},
     )["runs"]
     assert [(r[0], r[2]) for r in runs] == [(50, "AB"), (50, "C"), (50, "AB"), (50, "D")]
+
+
+def test_non_numeric_operands_are_ignored():
+    """An operator whose numeric operands are not numbers is skipped and
+    leaves the interpreter state as it was; the well-formed operators
+    around it still give their runs and rulings."""
+    from pdf_context_extractor_agent_spark.kernels.minipdf_layout import (
+        _tokenize_stream,
+    )
+
+    out = _tokenize_stream("1 (b) m 0 0 m 0 10 l S")
+    assert (out["runs"], out["h"], out["v"]) == ([], [], [(0, 792, 0, 782)])
+    out = _tokenize_stream("0 0 m (q) 1 l 0 0 m 5 0 l S")
+    assert (out["runs"], out["h"], out["v"]) == ([], [(0, 792, 5, 792)], [])
+    # the bad Td / Tm keep the text position the last good Tm set
+    out = _tokenize_stream("BT 1 0 0 1 50 700 Tm /F1 2 Td (a) Tj ET")
+    assert out["runs"] == [(50, 92, "a")]
+    out = _tokenize_stream("BT 1 0 0 1 50 700 Tm 1 2 3 4 5 (x) Tm (y) Tj ET")
+    assert out["runs"] == [(50, 92, "y")]
+    # a bad TL keeps the leading; a bad Tf keeps font and size
+    out = _tokenize_stream("BT 14 TL (a) TL 1 0 0 1 0 700 Tm T* (b) Tj ET")
+    assert out["runs"] == [(0, 106, "b")]
+    wt = (65, (500, 1000), 0)
+    out = _tokenize_stream(
+        "BT /F3 20 Tf /F1 /F2 Tf 1 0 0 1 0 700 Tm (AB) Tj (A) Tj ET",
+        fonts={"/F3": (None, wt)},
+    )
+    assert [(r[0], r[2]) for r in out["runs"]] == [(0, "AB"), (30, "A")]
+
+
+def test_parse_minipdf_fuzz_never_raises():
+    """Seeded prefix cuts and 3-byte mutations of ten minipdf corpus
+    docs (every slice: CID, widths, ObjStm, mixed codespace, encrypted,
+    broken xref) never raise from the parser. The one exception allowed
+    is a refusal raised inside ``_encryption_key``: an unsupported or
+    password-protected handler, which ``parse_doc`` turns into a
+    placeholder page."""
+    import random
+    import traceback
+
+    from pdf_context_extractor_agent_spark.kernels.minipdf_layout import (
+        parse_minipdf,
+    )
+
+    rng = random.Random(20261019)
+    cases = []
+    for i in (4, 14, 24, 34, 44, 54, 64, 74, 104, 124):
+        doc = make_doc(i)[2]
+        cases += [doc[:rng.randrange(len(doc))] for _ in range(30)]
+        for _ in range(30):
+            p = rng.randrange(len(doc) - 3)
+            cases.append(doc[:p] + rng.randbytes(3) + doc[p + 3:])
+    assert len(cases) == 600
+    raised = []
+    for blob in cases:
+        try:
+            parse_minipdf(blob)
+        except Exception as e:  # noqa: BLE001 - the contract under test
+            where = traceback.extract_tb(e.__traceback__)[-1].name
+            if where != "_encryption_key":
+                raised.append((type(e).__name__, where, str(e)))
+    assert raised == []
 
 
 def test_indirect_length_reference_decrypts_fully():

@@ -78,7 +78,8 @@ def test_streaming_extract_statements_matches_batch(spark, stream_dir, tmp_path)
     """foreachBatch full extraction on the ingest stream produces the
     same parsed rows as the batch plan over the same documents (per-doc
     extraction has no cross-document state, so micro-batch boundaries
-    cannot change results)."""
+    cannot change results) — also after a crash between a batch's write
+    and its checkpoint commit, when the restarted query replays it."""
     from pdf_context_extractor_agent_spark.corpus import PAGES_SCHEMA
     from pdf_context_extractor_agent_spark.kernels import extract_pages
     from pdf_context_extractor_agent_spark.plans import parse_statements
@@ -87,21 +88,33 @@ def test_streaming_extract_statements_matches_batch(spark, stream_dir, tmp_path)
     )
 
     out = str(tmp_path / "parsed_stream")
-    q = streaming_extract_statements(
-        spark, f"{stream_dir}/*", out, str(tmp_path / "ckpt_extract")
-    )
-    q.awaitTermination(300)
+    ckpt = tmp_path / "ckpt_extract"
 
-    got = spark.read.parquet(out).drop("batch_id")
+    def run():
+        q = streaming_extract_statements(spark, f"{stream_dir}/*", out, str(ckpt))
+        q.awaitTermination(300)
+
     pages = spark.read.schema(PAGES_SCHEMA).parquet(f"{stream_dir}/*")
     want = parse_statements(extract_pages(pages), spark)["parsed"]
-    cols = sorted(got.columns)
-    assert cols == sorted(want.columns)
+    cols = sorted(want.columns)
+
     def rows(df):
         return sorted(tuple(map(repr, r)) for r in df.select(*cols).collect())
 
-    g, w = rows(got), rows(want)
-    assert g == w and len(g) > 0
+    w = rows(want)
+    assert len(w) > 0
+    run()
+    got = spark.read.parquet(out)
+    assert sorted(got.drop("batch_id").columns) == cols
+    assert rows(got) == w
+    # forget the commits (a crash after the sink wrote, before the
+    # commit log did): the restart replays those batch ids
+    commits = list((ckpt / "commits").iterdir())
+    assert commits
+    for f in commits:
+        f.unlink()
+    run()
+    assert rows(spark.read.parquet(out)) == w
 
 
 def test_streaming_minhash_neardup_matches_batch(spark, tmp_path):
