@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterate import iterate
+from .iterate import cut, iterate
 
 RANK_SCALE = 10**12
 HITS_SCALE = 10**6
@@ -136,14 +136,14 @@ def page_rank(
     # The edge relation and outdeg are re-read every iteration, and the
     # rank state fans out twice per round (contrib + dangling mass): an
     # uncut lineage re-derives the caller's edge pipeline O(2^n_iter)
-    # times.  Checkpoint both inputs once; iterate() cuts the state.
+    # times.  Cut both inputs once; iterate() cuts the state.
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     nodes = spark.range(n_nodes).select(F.col("id").alias("node"))
     outdeg = e.groupBy("src").agg(
         F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     base = (100 - damping_pct) * RANK_SCALE // n_nodes // 100
 
     def step(rank: DataFrame, _: int) -> DataFrame:
@@ -216,7 +216,7 @@ def hits(
     # an uncut chain recomputes upstream work exponentially.
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     nodes = spark.range(n_nodes).select(F.col("id").alias("node"))
 
     def normalized(raw: DataFrame, key: str, out: str) -> DataFrame:
@@ -292,7 +292,7 @@ def label_propagation(
         e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # lab fans out twice per round (vote join + coalesce join) — pin
     # the per-round edge relation; iterate() cuts the label state.
-    e = e.localCheckpoint(eager=False)
+    e = cut(e)
     nodes = spark.range(n_nodes).select(F.col("id").alias("node"))
 
     def step(lab: DataFrame, _: int) -> DataFrame:
@@ -386,7 +386,7 @@ def hyperball(
     # is exponential in t.
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     nodes = spark.range(n_nodes).select(F.col("id").alias("node"))
     h = md5_hash60(F.col("node").cast("string"), 0)
     w = F.shiftright(h, p)
@@ -449,7 +449,7 @@ def host_graph(
         # this distinct — and consumers (host_rank) iterate over the
         # edges while also counting the dimension.  Cut the lineage here
         # (lazily) so the page→host distinct runs exactly once per job.
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     hosts = (
         e.select(F.col("hs").alias("host"))
@@ -468,7 +468,7 @@ def host_graph(
     )
     dim = loc.join(F.broadcast(offsets), "_pid").select(
         "host", (F.col("_lr") - 1 + F.col("_off")).cast("long").alias("hid")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     edges = (
         e.join(dim.select(F.col("host").alias("hs"), F.col("hid").alias("src")),
                "hs")

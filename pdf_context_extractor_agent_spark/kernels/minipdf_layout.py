@@ -56,6 +56,7 @@ from __future__ import annotations
 import hashlib
 import re
 import zlib
+from math import isfinite
 from typing import NamedTuple
 
 from .pdfish_layout import assemble_pages
@@ -92,12 +93,13 @@ def _unescape(s: str) -> str:
 
 def _nums(stack: list[str], n: int) -> tuple[float, ...] | None:
     """The last ``n`` operands as floats; None when fewer than ``n`` are
-    stacked or one of them is not a number (a string or a name)."""
+    stacked or one of them is not a finite number (a string, a name, or
+    309+ digits, which read as ``inf``)."""
     try:
         v = tuple(map(float, stack[-n:]))
     except ValueError:
         return None
-    return v if len(v) == n else None
+    return v if len(v) == n and all(map(isfinite, v)) else None
 
 
 def _text_width(text: str, wt: WidthTable) -> int:
@@ -162,7 +164,8 @@ def _tokenize_stream(
         """<XXXX…> hex string → text, decoded through the active font's
         codespace ranges (variable byte length: e.g. 1-byte ASCII +
         2-byte CID regions) and its ToUnicode CMap; chr(code) when a
-        code has no mapping (the Identity interpretation). Odd final
+        code has no mapping (the Identity interpretation), U+FFFD when
+        that code is a surrogate or past U+10FFFF. Odd final
         digit pads with 0 (spec). Unmatched byte sequences consume the
         shortest declared code length — the spec's error recovery."""
         hx = "".join(tok[1:-1].split())
@@ -186,7 +189,12 @@ def _tokenize_stream(
                 code = int.from_bytes(bs[i:i + used], "big")
             cid = _apply_code2cid(code, code2cid)
             mapped = cmap.get(cid)
-            out.append(mapped if mapped is not None else chr(cid))
+            if mapped is None:
+                # no text holds a surrogate or a code past U+10FFFF (a
+                # 4-byte codespace reaches that far)
+                bad = 0xD800 <= cid <= 0xDFFF or cid > 0x10FFFF
+                mapped = "\ufffd" if bad else chr(cid)
+            out.append(mapped)
             i += used
         return "".join(out)
 
@@ -199,10 +207,17 @@ def _tokenize_stream(
         if cur_widths is not None:
             tx += _text_width(text, cur_widths) * cur_size / 1000.0
 
+    def emit(text: str) -> None:
+        # finite operands can still sum past the float range (Td after
+        # Td, a huge Tf size times the widths): such a run has no place
+        # on the page and is dropped
+        if isfinite(tx) and isfinite(ty):
+            runs.append((int(tx), flip(ty), text))
+
     def show_top() -> None:
         if stack and stack[-1][0] in "(<":
             text = shown(stack[-1])
-            runs.append((int(tx), flip(ty), text))
+            emit(text)
             advance(text)
 
     for m in _TOKEN_RE.finditer(data):
@@ -242,7 +257,7 @@ def _tokenize_stream(
                     adv -= k
                 text = "".join(parts)
                 if text:
-                    runs.append((int(tx), flip(ty), text))
+                    emit(text)
                 if cur_widths is not None:
                     tx += adv * cur_size / 1000.0
             elif tok == "TL":
@@ -705,7 +720,9 @@ def _parse_tounicode(text: str) -> CMapTable:
                 if not base:
                     continue
                 last = ord(base[-1])
-                for c in range(lo, min(hi, lo + 0xFFFF) + 1):
+                # codes the last code unit would count past U+10FFFF
+                # stay unmapped
+                for c in range(lo, min(hi, lo + 0xFFFF, lo + 0x10FFFF - last) + 1):
                     cmap[c] = base[:-1] + chr(last + (c - lo))
     for block in _BFCHAR_RE.findall(text):
         for src, dst in _HEX_PAIR_RE.findall(block):

@@ -17,6 +17,7 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.iterate import cut
 from ..functions.text import matched_pattern_ids
 from ..patterns import item_pattern_df, item_pattern_list, item_pid_ranges
 
@@ -88,10 +89,10 @@ def match_items(items: DataFrame, spark: SparkSession) -> dict[str, DataFrame]:
         .withColumn("pid", F.array_min(_pid_array_expr()))
     )
     # every output reads the pid-joined relation (winners, unmatched,
-    # counts); persist it so the dictionary join and the items it reads
-    # are evaluated once per run. The pattern-dim join on the winner
-    # side is a broadcast lookup, cheap to repeat per consumer.
-    with_pid = items.join(name_pid, ["statement_type", "item_name"], "left").persist()
+    # counts); cut it so the dictionary join and the items it reads are
+    # evaluated once per run. The pattern-dim join on the winner side
+    # is a broadcast lookup, cheap to repeat per consumer.
+    with_pid = cut(items.join(name_pid, ["statement_type", "item_name"], "left"))
     winners = with_pid.filter(F.col("pid").isNotNull()).join(pat, "pid")
     unmatched_rows = with_pid.filter(F.col("pid").isNull()).select(
         "url", "statement_type", "row_idx", "item_name",

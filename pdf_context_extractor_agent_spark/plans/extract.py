@@ -20,8 +20,9 @@ ordering logic. Row extraction runs in one Arrow-batched kernel that
 branches per row between the header-map path and the dynamic
 re-analysis fallback, after a one-row-per-document header-analysis hop.
 
-Five relations are persisted, each because more than one consumer of
-one run reads it and recomputing it would re-run work upstream of it:
+Five relations are cut (``functions/iterate.py:cut``, the engine's one
+lineage-cut policy), each because more than one consumer of one run
+reads it and recomputing it would re-run work upstream of it:
 
 * ``rows`` — the merged clean rows; read by SI, the header-row join
   and the statement-range join (the page kernel + merge lineage);
@@ -35,7 +36,10 @@ one run reads it and recomputing it would re-run work upstream of it:
 * ``slots`` — read by checks, completeness and the summary.
 
 With these, each Python kernel evaluates each of its input rows once
-however many of the returned relations a caller writes.
+however many of the returned relations a caller writes. Each cut is a
+``Scan ExistingRDD`` leaf, so no returned plan nests another's (a
+persist nests its input's whole physical plan in every reader's): the
+physical plan of ``parsed`` holds 3 exchanges and that of ``summary`` 6.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.iterate import cut
 from ..operators.boundary import balance_boundaries, prune_rows_to_boundary
 from ..operators.columns import extract_items, header_maps
 from ..operators.match import match_items
@@ -61,14 +66,14 @@ def statement_rows(page_df: DataFrame) -> DataFrame:
 def _parse_from_rows(
     rows: DataFrame, spark: SparkSession, statement_types: tuple[str, ...]
 ) -> dict[str, DataFrame]:
-    # Persisted: rows, structure, items, slots, and the pid-joined
-    # relation inside match_items (the module docstring names who reads
-    # each). Unpersisted, every further reader would re-run the page
-    # kernel + merge lineage or a Python kernel. At 10^12-row scale
-    # these become checkpointed Iceberg stage tables; in-memory/disk
-    # persist is the single-job analog.
-    rows = rows.persist()
-    structure = identify_structures(rows, spark, statement_types).persist()
+    # Cut: rows, structure, items, slots, and the pid-joined relation
+    # inside match_items (the module docstring names who reads each).
+    # Uncut, every further reader would re-run the page kernel + merge
+    # lineage or a Python kernel. At 10^12-row scale these become
+    # checkpointed Iceberg stage tables; a local checkpoint is the
+    # single-job analog.
+    rows = cut(rows)
+    structure = cut(identify_structures(rows, spark, statement_types))
 
     # header column map per (url, statement): C1-C3 over the header row
     # cells (a tiny Arrow hop — one row per document-statement).
@@ -100,15 +105,15 @@ def _parse_from_rows(
                 "item_col", "cur_col", "prev_col", "note_col")
     )
     # items feeds match_items' distinct-name dictionary AND the probe
-    # side of its pid join: unpersisted, one run of the plan would
-    # evaluate the items kernel (and header_maps under it) once per read
-    items = extract_items(ranged).persist()
+    # side of its pid join: uncut, one run of the plan would evaluate
+    # the items kernel (and header_maps under it) once per read
+    items = cut(extract_items(ranged))
     m = match_items(items, spark)
     # slots feed checks + completeness + summary
-    m["slots"] = m["slots"].persist()
+    m["slots"] = cut(m["slots"])
 
-    # J4: match counts from match_items' one aggregation over its
-    # persisted pid-joined relation; total_rows is the merged table's
+    # J4: match counts from match_items' one aggregation over its cut
+    # pid-joined relation; total_rows is the merged table's
     # row count, which SI already carries per (url, statement) as max_row
     parsing_info = m["counts"].join(
         structure.select(

@@ -1029,8 +1029,10 @@ def test_non_numeric_operands_are_ignored():
     """An operator whose numeric operands are not numbers is skipped and
     leaves the interpreter state as it was; the well-formed operators
     around it still give their runs and rulings."""
+    from pdf_context_extractor_agent_spark.kernels.html_layout import parse_doc
     from pdf_context_extractor_agent_spark.kernels.minipdf_layout import (
         _tokenize_stream,
+        render_minipdf,
     )
 
     out = _tokenize_stream("1 (b) m 0 0 m 0 10 l S")
@@ -1051,6 +1053,47 @@ def test_non_numeric_operands_are_ignored():
         fonts={"/F3": (None, wt)},
     )
     assert [(r[0], r[2]) for r in out["runs"]] == [(0, "AB"), (30, "A")]
+    # 309+ digits read as inf: the Tm is skipped like a non-number one,
+    # and the document keeps both its pages
+    big = "9" * 400
+    out = _tokenize_stream(f"BT 1 0 0 1 50 700 Tm 1 0 0 1 {big} 700 Tm (a) Tj ET")
+    assert out["runs"] == [(50, 92, "a")]
+    pages = parse_doc(render_minipdf([
+        "BT 1 0 0 1 50 700 Tm (good page) Tj ET",
+        f"BT 1 0 0 1 {big} 700 Tm (a) Tj ET",
+    ]))
+    assert [p["page_text"] for p in pages] == ["good page", "a"]
+    # finite operands that sum past the float range: the runs placed
+    # there are dropped, the runs before them kept
+    huge = "9" * 308
+    out = _tokenize_stream(
+        f"BT 1 0 0 1 50 700 Tm (a) Tj {huge} 0 Td {huge} 0 Td (b) Tj [(c)] TJ ET"
+    )
+    assert out["runs"] == [(50, 92, "a")]
+    out = _tokenize_stream(
+        f"BT /F3 {huge} Tf 1 0 0 1 0 700 Tm (AB) Tj (A) Tj ET", fonts={"/F3": (None, wt)}
+    )
+    assert out["runs"] == [(0, 92, "AB")]
+
+
+def test_unmapped_codes_outside_unicode_decode_to_replacement():
+    """An unmapped code decodes as its own code point, except where no
+    text can hold it: a surrogate, or a code past U+10FFFF from a
+    4-byte codespace, is U+FFFD. A ToUnicode bfrange whose last code
+    unit would count past U+10FFFF maps only the codes below it."""
+    from pdf_context_extractor_agent_spark.kernels.minipdf_layout import (
+        _parse_tounicode,
+        _tokenize_stream,
+    )
+
+    four = {"/F2": (({}, ((4, 0, 0xFFFFFFFF),), None), None)}
+    out = _tokenize_stream("BT /F2 10 Tf <FFFFFFFF> Tj <00004E2D> Tj ET", fonts=four)
+    assert [r[2] for r in out["runs"]] == ["\ufffd", "中"]
+    two = {"/F2": (({}, ((2, 0, 0xFFFF),), None), None)}
+    out = _tokenize_stream("BT /F2 10 Tf <D800> Tj <DFFF> Tj <E000> Tj ET", fonts=two)
+    assert [r[2] for r in out["runs"]] == ["\ufffd", "\ufffd", "\ue000"]
+    cmap = _parse_tounicode("beginbfrange\n<0000> <0005> <DBFFDFFE>\nendbfrange")[0]
+    assert cmap == {0: "\U0010fffe", 1: "\U0010ffff"}
 
 
 def test_parse_minipdf_fuzz_never_raises():

@@ -119,8 +119,8 @@ def test_match_items_expected_relations(spark):
 def test_statement_kernels_evaluate_each_row_once(spark, page_df, tmp_path, monkeypatch):
     """Writing ``parsed``, ``checks`` and ``summary`` runs the items and
     header-map Python kernels once per input row, not once per
-    downstream read: ``items`` and the pid-joined relation are persisted,
-    and ``parsing_info`` is one aggregation over the latter. An identity
+    downstream read: ``items`` and the pid-joined relation are lineage
+    cuts, and ``parsing_info`` is one aggregation over the latter. An identity
     mapInPandas in front of each kernel adds every batch it forwards to
     an accumulator, so a relation re-derived by a second consumer shows
     up as a multiple of the input row count."""
@@ -197,41 +197,82 @@ def test_quality_never_reads_html(spark):
         assert "ReadSchema: struct<url:string,text:string>" in plan
 
 
-def test_no_forced_broadcast_on_per_doc_relations(spark, page_df):
+def _broadcast_sides(plan) -> list[set[str]]:
+    """Column names of the child of every BroadcastExchange in a JVM
+    physical plan tree."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+        if node.nodeName() == "BroadcastExchange":
+            out.append(set(node.child().schema().fieldNames()))
+    return out
+
+
+def test_no_forced_broadcast_on_per_doc_relations(spark, page_df, monkeypatch):
     """VERDICT r1 regression lock: structure / header-map / per-url
     relations have one-row-per-document cardinality and must NOT carry
     a broadcast hint (at 10^12 rows a forced broadcast OOMs). With auto
-    broadcast disabled and AQE off, any BroadcastExchange left in the
-    plan comes from an explicit hint — and every one must sit above a
-    LocalTableScan (the tiny pattern/anchor dims), never above the
-    kernel/parquet-backed per-document relations."""
-    from pdf_context_extractor_agent_spark.plans import parse_statements
+    broadcast disabled and AQE off, any BroadcastExchange left in a plan
+    comes from an explicit hint, and every one must broadcast a tiny
+    dim, named here by its schema: the item-pattern bank or the
+    completeness essentials. A hint under a lineage cut leaves the plans
+    above it, so the plans checked are every returned relation's and
+    the input of each of the plan's five cuts."""
+    from pdf_context_extractor_agent_spark.functions.iterate import cut
+    from pdf_context_extractor_agent_spark.operators import match, validate
+    from pdf_context_extractor_agent_spark.patterns import item_pattern_df
+    from pdf_context_extractor_agent_spark.plans import extract
 
+    cut_inputs = []
+
+    def recorded_cut(df):
+        cut_inputs.append(df)
+        return cut(df)
+
+    monkeypatch.setattr(extract, "cut", recorded_cut)
+    monkeypatch.setattr(match, "cut", recorded_cut)
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # cached fragments planned earlier (with AQE on) would leak
-        # AQE-CHOSEN broadcasts into this dump; those are legitimate —
+        # relations other tests cached, planned with AQE on, would leak
+        # AQE-CHOSEN broadcasts into these plans; those are legitimate —
         # only compile-time hints are under test
         spark.catalog.clearCache()
-        plan = _physical(parse_statements(page_df, spark)["parsed"])
+        res = extract.parse_statements(page_df, spark)
+        plans = [df._jdf.queryExecution().executedPlan()
+                 for df in (*cut_inputs, *res.values())]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
         page_df.persist()  # restore the shared fixture's cache mark
-    segments = plan.split("BroadcastExchange")[1:]
-    assert segments, "pattern dims should still be hint-broadcast"
-    leaf_re = __import__("re").compile(
-        r"LocalTableScan|Scan ExistingRDD|FileScan|MapInPandas|FlatMapGroupsInPandas|Scan parquet"
-    )
-    local_leaves = {"LocalTableScan", "Scan ExistingRDD"}  # driver-local tiny dims
-    for seg in segments:
-        first_leaf = leaf_re.search(seg)
-        assert first_leaf and first_leaf.group(0) in local_leaves, (
-            "BroadcastExchange over a non-local (per-document) relation:\n" + seg[:800]
+    assert len(cut_inputs) == 5
+    dims = [set(item_pattern_df(spark).columns),
+            set(validate._essential_dim(spark).columns)]
+    sides = [side for p in plans for side in _broadcast_sides(p)]
+    assert sides, "pattern dims should still be hint-broadcast"
+    for side in sides:
+        assert any(side <= dim for dim in dims), (
+            f"BroadcastExchange over a per-document relation: {sorted(side)}"
         )
+
+
+def test_statement_plan_is_cut_at_its_reuse_points(spark, page_df):
+    """The statement plan's reused relations are lineage cuts
+    (``functions/iterate.py:cut``), not persists: no relation that
+    ``parse_statements`` returns nests an InMemoryRelation, and
+    ``parsed`` and ``summary`` hold only their own few exchanges. With
+    nested persists each reader's plan carried every upstream plan:
+    67 and 111 exchanges here, against 3 and 6 cut."""
+    from pdf_context_extractor_agent_spark.plans import parse_statements
+
+    plans = {k: _physical(df) for k, df in parse_statements(page_df, spark).items()}
+    assert [k for k, p in plans.items() if "InMemoryRelation" in p] == []
+    assert plans["parsed"].count("Exchange") <= 4
+    assert plans["summary"].count("Exchange") <= 8
 
 
 def test_trigger_guard_classification():
