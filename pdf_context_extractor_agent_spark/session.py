@@ -68,6 +68,14 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
+        # The generated-class cache is one LRU for the whole JVM, and
+        # Spark's default of 100 classes is smaller than one statement
+        # run (~145 whole-stage classes on the reports corpus): each
+        # class is evicted before its next use, so every warm run
+        # recompiled ~140 classes with Janino, a quarter of its wall
+        # time, and how long that took followed the JIT's state. Static
+        # conf: binds at the first session of the process.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         # broadcast threshold: the pattern/anchor dimension tables are
         # a few KB; the default 10MB is fine, stated here for intent.
