@@ -2,7 +2,8 @@
 """Benchmark harness.
 
 Runs the headline workload at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+host's usable CPUs, ``session.default_cores``) and prints ONE
 JSON line::
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -30,8 +31,10 @@ import sys
 import threading
 import time
 
+from pdf_context_extractor_agent_spark.session import default_cores
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 SF = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in SF_DIR else -1.0
 
 QUICK = "--quick" in sys.argv

@@ -721,9 +721,12 @@ def _parse_tounicode(text: str) -> CMapTable:
                     continue
                 last = ord(base[-1])
                 # codes the last code unit would count past U+10FFFF
-                # stay unmapped
+                # stay unmapped; those it counts into the surrogate block
+                # map to U+FFFD, as ``hexs`` shows an unmapped surrogate
+                # code (no page text may hold a lone surrogate)
                 for c in range(lo, min(hi, lo + 0xFFFF, lo + 0x10FFFF - last) + 1):
-                    cmap[c] = base[:-1] + chr(last + (c - lo))
+                    u = last + (c - lo)
+                    cmap[c] = base[:-1] + ("\ufffd" if 0xD800 <= u <= 0xDFFF else chr(u))
     for block in _BFCHAR_RE.findall(text):
         for src, dst in _HEX_PAIR_RE.findall(block):
             cmap[_hex_int(src)] = _u(dst)

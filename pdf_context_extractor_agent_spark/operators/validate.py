@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import to_num
-from ..patterns import DEDUCTION_KEYWORDS, ESSENTIAL_ITEMS, TOLERANCE
+from ..patterns import DEDUCTION_KEYWORDS, ESSENTIAL_ITEMS, TOLERANCE, local_frame
 
 
 def _is_deduction(name: Column) -> Column:
@@ -288,8 +288,8 @@ def validation_checks(slots: DataFrame) -> DataFrame:
 
 @lru_cache(maxsize=4)
 def _essential_dim(spark) -> DataFrame:
-    # session-keyed: createDataFrame is ~0.15 s of driver round-trips
-    # per plan build otherwise (the dim itself never changes).
+    # session-keyed: building the frame is a driver round-trip per plan
+    # build otherwise (the dim itself never changes).
     # ``kind`` encodes each statement's matching rule (reference
     # validator parity): balance matches essentials by SUBSTRING inside
     # the asset/liability sections; income/cash-flow require the exact
@@ -302,8 +302,8 @@ def _essential_dim(spark) -> DataFrame:
     ):
         ess = ESSENTIAL_ITEMS[stmt]
         rows += [(stmt, e, len(ess), kind) for e in ess]
-    return spark.createDataFrame(
-        rows, "statement_type string, essential string, n_required int, kind string"
+    return local_frame(
+        spark, rows, "statement_type string, essential string, n_required int, kind string"
     )
 
 

@@ -18,7 +18,9 @@ from __future__ import annotations
 
 from functools import lru_cache
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # ---------------------------------------------------------------------------
 # Column-role keyword banks (reference: src/parsers/column_analyzer.py:28-45)
@@ -376,14 +378,24 @@ def _item_rows() -> list[tuple]:
     return rows
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Constant rows as a ``LocalRelation``: the rows travel to the JVM
+    once as an Arrow table, so reading the frame starts no job and no
+    Python worker (a list of rows becomes a PythonRDD that unpickles
+    them in Python workers on every read)."""
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(pa.table(list(zip(*rows)), names=schema.names), schema)
+
+
 @lru_cache(maxsize=4)
 def item_pattern_df(spark: SparkSession) -> DataFrame:
     """The unified J1+J3 pattern bank as a broadcastable DataFrame.
 
-    Session-keyed, like ``validate._essential_dim``: createDataFrame is
-    a driver round-trip per plan build otherwise, and the bank never
+    Session-keyed, like ``validate._essential_dim``: building the frame
+    is a driver round-trip per plan build otherwise, and the bank never
     changes within a process."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _item_rows(),
         "pid int, statement_type string, section_path string, standard_name string, "
         "pattern string, cat_ord int, std_ord int, pat_ord int, is_total boolean",

@@ -1,11 +1,11 @@
 """Pages-table source: Iceberg-or-parquet scan + skew-salted repartition.
 
-The production table is Iceberg (north_rule); this sandbox has no
-Iceberg catalog jar, so the reader falls back to parquet transparently —
-the DataFrame shape and every downstream plan are identical. Column
-pruning at this scan is the single most important scale property: a
-stage that needs only ``text`` must never read the ``html`` binary
-(SURVEY.md §4), which both formats guarantee for columnar reads.
+The production table is Iceberg (north_rule); a location without Iceberg
+table metadata is read as parquet — the DataFrame shape and every
+downstream plan are identical. Column pruning at this scan is the single
+most important scale property: a stage that needs only ``text`` must
+never read the ``html`` binary (SURVEY.md §4), which both formats
+guarantee for columnar reads.
 """
 
 from __future__ import annotations
@@ -15,13 +15,22 @@ from pyspark.sql import functions as F
 
 
 def read_pages(spark: SparkSession, path_or_table: str) -> DataFrame:
-    """Read the (url, warc_ts, html, text, lang) table."""
+    """Read the (url, warc_ts, html, text, lang) table: a catalog table
+    by name, an Iceberg table by the ``metadata/`` directory at its
+    location, else parquet files.
+
+    The directory is looked up through the Hadoop ``FileSystem`` of the
+    location's scheme, so object-store URIs route the same way. Asking
+    for an unknown format is not free: Spark then starts a Python worker
+    to look the name up among Python data sources."""
     if "/" not in path_or_table:
         return spark.read.table(path_or_table)
-    try:
+    jvm = spark.sparkContext._jvm
+    meta = jvm.org.apache.hadoop.fs.Path(path_or_table.rstrip("/") + "/metadata")
+    fs = meta.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if fs.isDirectory(meta):
         return spark.read.format("iceberg").load(path_or_table)
-    except Exception:
-        return spark.read.parquet(path_or_table)
+    return spark.read.parquet(path_or_table)
 
 
 DEFAULT_JUMBO_BYTES = 8 * 1024 * 1024

@@ -5,7 +5,7 @@
 # cluster master URL; nothing else changes.
 set -euo pipefail
 HERE="$(cd "$(dirname "$0")/.." && pwd)"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 ZIP="$(mktemp -d)/pdf_context_extractor_agent_spark.zip"
 (cd "$HERE" && zip -qr "$ZIP" pdf_context_extractor_agent_spark)
 exec spark-submit \

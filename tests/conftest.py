@@ -10,9 +10,9 @@ from pdf_context_extractor_agent_spark.session import get_spark
 
 N_TEST_DOCS = 20
 
-# The suite's JVM needs a few GB, not session.py's 48g production
-# default: a heap that may grow to 48g gets the JVM OOM-killed on a
-# 16 GB host partway through the suite. An explicit setting still wins.
+# The suite's JVM needs a few GB. A fixed heap keeps its runs alike on
+# every host, where session.py's default is a share of the host's
+# memory. An explicit setting still wins.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 

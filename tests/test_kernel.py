@@ -1096,6 +1096,27 @@ def test_unmapped_codes_outside_unicode_decode_to_replacement():
     assert cmap == {0: "\U0010fffe", 1: "\U0010ffff"}
 
 
+def test_bfrange_into_surrogates_keeps_the_page_in_spark(spark):
+    """A ToUnicode bfrange whose last code unit counts into the
+    surrogate block maps those codes to U+FFFD. A lone surrogate in page
+    text cannot be encoded as UTF-8 at the kernel's Arrow boundary: the
+    extract_pages task would fail instead of the document degrading."""
+    from pdf_context_extractor_agent_spark.kernels import extract_pages
+    from pdf_context_extractor_agent_spark.kernels.minipdf_layout import render_minipdf
+
+    blob = render_minipdf(
+        ["BT /F2 10 Tf 1 0 0 1 20 772 Tm <004100420043> Tj ET"],
+        cid_cmap={0x41: "퟾", 0x42: "퟿"},
+    )
+    # widen the writer's <0041> <0042> range by one code, into U+D800
+    old = b"<0041> <0042> <D7FE>"
+    assert blob.count(old) == 1
+    blob = blob.replace(old, b"<0041> <0043> <D7FE>")
+    pages = spark.createDataFrame([("u_surrogate", blob)], "url string, html binary")
+    rows = extract_pages(pages).select("page_text").collect()
+    assert [r.page_text for r in rows] == ["퟾퟿�"]
+
+
 def test_parse_minipdf_fuzz_never_raises():
     """Seeded prefix cuts and 3-byte mutations of ten minipdf corpus
     docs (every slice: CID, widths, ObjStm, mixed codespace, encrypted,
